@@ -1919,13 +1919,13 @@ def q_ingest_m1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second time (r11 event-log profile: two 65-task ArrowEvalPython
     # stages for one query — the batch-4 range-sampler shape). The
     # checkpoint runs the embed exactly once; the sort reads 15k tiny
-    # rows from storage. plan_barrier (r12) picks a RELIABLE checkpoint
+    # rows from storage. plan.barrier picks a RELIABLE checkpoint
     # when the deployment configured a checkpoint dir — on a cluster an
     # executor loss after this barrier would otherwise fail the query
     # instead of recomputing (ADVICE r11).
-    from hippollm_spark.operators.dedup import plan_barrier
+    from hippollm_spark import plan
 
-    return plan_barrier(proj, eager=True).orderBy("name")
+    return plan.barrier(proj, eager=True).orderBy("name")
 
 
 def q_emb_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2445,11 +2445,12 @@ def q_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level top-20 word trigrams by document frequency."""
-    from hippollm_spark.operators.dedup import _cpu_spread, with_shingles
+    from hippollm_spark import plan
+    from hippollm_spark.operators.dedup import with_shingles
 
     # spread before the shingle transform: single-file scans otherwise
     # run the whole tokenizer+n-gram chain in one task (r11, guide §2.2)
-    sh = with_shingles(_cpu_spread(_t(spark, sf_dir, "documents"), None), n=3)
+    sh = with_shingles(plan.spread(_t(spark, sf_dir, "documents")), n=3)
     return (
         sh.select(F.explode("shingles").alias("ngram"))
         .groupBy("ngram")
@@ -3866,7 +3867,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # oracle regrouped by distinct name; IVF-PQ artifact retrained at
     # nlist=128 with k-means++ seeding, nprobe rescaled, both IVF
     # queries; curate_corpus pin/guard rework behind both curation
-    # entries; the _loop_tuning/_bc gating rework behind every
+    # entries; the loop_tuning/broadcast_if gating rework behind every
     # iterative graph query). Slots 15-49 keep round 7's freshness
     # rotation. NOTE the full 183-query sweep (tools/check_oracle.py,
     # ~4 min) is the real per-round gate since r8 — this prefix is
@@ -3879,14 +3880,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_curation": q_corpus_curation,  # pin seal rework r8
         "corpus_curation_semantic": q_corpus_curation_semantic,  # r8
         "doc_containment": q_doc_containment,  # max_shingle_df warn r8
-        "graph_hits": q_graph_hits,  # _bc vertex-count gating r8
-        "lpa_communities": q_lpa_communities,  # _bc vertex-count gating r8
+        "graph_hits": q_graph_hits,  # broadcast_if vertex-count gating r8
+        "lpa_communities": q_lpa_communities,  # broadcast_if vertex-count gating r8
         "graph_bfs": q_graph_bfs,  # frontier-size gating r8
         "graph_sssp": q_graph_sssp,  # 2x-edge dist bound r8
-        "graph_components": q_graph_components,  # _loop_tuning refcount r8
+        "graph_components": q_graph_components,  # loop_tuning refcount r8
         "graph_components_star": q_graph_components_star,  # 2x-edge bound r8
-        "graph_pagerank": q_graph_pagerank,  # _loop_tuning refcount r8
-        "graph_kcore": q_graph_kcore,  # _loop_tuning refcount r8
+        "graph_pagerank": q_graph_pagerank,  # loop_tuning refcount r8
+        "graph_kcore": q_graph_kcore,  # loop_tuning refcount r8
     # --- round-7 rotation rows (fresh as of r7) ---
         "kmeans_clusters": q_kmeans_clusters,  # shared-fit memo r7
         "semantic_dedup": q_semantic_dedup,  # struct-min keeper r7

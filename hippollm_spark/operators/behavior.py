@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
+
 __all__ = ["funnel_counts", "cohort_retention"]
 
 
@@ -382,7 +384,7 @@ def rfm_segments(
     else:
         from hippollm_spark.operators.stats import global_percentile_values
 
-        per_user = per_user.localCheckpoint(eager=True)
+        per_user = plan.barrier(per_user, eager=True)
         ps = [i / n_bins for i in range(1, n_bins)]
 
         def _score(col: str, ascending_is_good: bool):

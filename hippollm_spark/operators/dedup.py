@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hippollm_spark import plan
+
 # Scale-hazard warnings fire once per process per call site: the
 # hazardous defaults exist for the oracle checks (DuckDB replays the
 # exact uncapped SQL), and the repo's own bench/oracle sweeps call
@@ -142,14 +144,6 @@ def shingles_from_tokens(tokens_col, n: int = 3):
     )
 
 
-def word_shingles(text_col: str, n: int = 3):
-    """Distinct word n-grams as ARRAY<STRING> directly from a text
-    column. Prefer ``with_shingles`` (tokens materialized first) in
-    plans — this single-expression form re-runs the tokenizer per
-    shingle inside the transform lambda (see shingles_from_tokens)."""
-    return shingles_from_tokens(F.split(normalized_text(text_col), " "), n)
-
-
 def with_shingles(
     docs: DataFrame, n: int = 3, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -235,7 +229,7 @@ def jaccard_dup_pairs(
             "state; set max_shingle_df on large or boilerplate-heavy "
             "corpora",
         )
-    docs = _cpu_spread(docs, None)
+    docs = plan.spread(docs)
     sh = with_shingles(docs, n, id_col=id_col, text_col=text_col)
     ex = sh.select(
         "doc_id",
@@ -311,82 +305,6 @@ def _shingle_hash_expr(shingle_hash: str):
 
 
 
-def _cpu_spread(df: DataFrame, partitions: int | None) -> DataFrame:
-    """Spread rows across cores before a CPU-heavy Arrow/pandas stage.
-
-    Spark sizes file-scan partitions by BYTES, and a compact parquet
-    input is tiny relative to the per-row CPU of a signature/model
-    stage (a 40 MB documents file is ONE partition = one core while 31
-    idle — measured 10× on the minhash signature stage at 200k docs).
-    Same dial as relational.add_entities(embed_partitions=...).
-    Row-wise deterministic: placement never affects per-row results.
-
-    The spread decision reads the optimizer's LOGICAL size estimate,
-    never the materialized partition count: the previous
-    ``df.rdd.getNumPartitions()`` probe looks free but under AQE
-    ``.rdd`` finalizes the adaptive plan, which EXECUTES the whole
-    upstream — measured r11 as two 1.5-2.9 s single-task javaToPython
-    jobs at the head of every curation query (guide §1.4: ``.rdd``
-    costs what the real query does not). Plan-stats are available
-    without running anything: an estimated input below
-    ``maxPartitionBytes × partitions`` cannot produce enough scan
-    splits to fill the cores, so it is repartitioned; big inputs (the
-    100-TB case) keep their native splits and never pay the exchange.
-    """
-    if partitions is None:
-        partitions = df.sparkSession.sparkContext.defaultParallelism
-    if not partitions or partitions <= 0:
-        return df
-    try:
-        size = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        mpb = int(
-            df.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .filesMaxPartitionBytes()
-        )
-    except Exception:  # stats unavailable: leave the input as-is
-        return df
-    if size < mpb * partitions:
-        return df.repartition(partitions)
-    return df
-
-
-def plan_barrier(df: DataFrame, *, eager: bool = False) -> DataFrame:
-    """Lineage/plan barrier with a durability policy (guide §5).
-
-    ``localCheckpoint`` truncates lineage into NON-replicated executor
-    blocks: free and correct on local[‑] (one JVM — if it dies, the
-    whole app dies), but on a real cluster losing one executor
-    mid-query FAILS the job instead of recomputing the lost partitions.
-    Several 100-TB paths (the textstats postings barriers, ingest's
-    sampler pin, dedup_canonicalize's edge leaf) now lean on these
-    barriers, so the durability choice must be a deployment conf, not
-    a hard-coded local assumption:
-
-    - if the application configured a RELIABLE checkpoint directory
-      (``spark.sparkContext.setCheckpointDir(...)`` — HDFS/object
-      store), use ``checkpoint()``: blocks survive executor loss;
-    - otherwise use ``localCheckpoint()`` — the right local default
-      (reliable checkpointing without a distributed FS is just a slow
-      disk write).
-
-    Same plan-shape effect either way: the returned frame is a leaf,
-    so optimizer rules can no longer sink filters below it or
-    duplicate the subtree it cut off.
-    """
-    try:
-        has_dir = (
-            df.sparkSession.sparkContext._jsc.sc().checkpointDir().isDefined()
-        )
-    except Exception:
-        has_dir = False
-    if has_dir:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
 def _packed_hashes(sh: DataFrame, hexpr, partitions: int | None) -> DataFrame:
     """(doc_id, hb BINARY): each document's shingle hashes packed as
     big-endian int64 into ONE binary blob (hex per element, one
@@ -399,7 +317,7 @@ def _packed_hashes(sh: DataFrame, hexpr, partitions: int | None) -> DataFrame:
     unpacks with np.frombuffer(hb, dtype='>i8') — zero-copy semantics,
     bit-identical values.
     """
-    spread = _cpu_spread(sh, partitions)
+    spread = plan.spread(sh, partitions)
     return spread.select(
         "doc_id",
         F.to_binary(
@@ -410,48 +328,6 @@ def _packed_hashes(sh: DataFrame, hexpr, partitions: int | None) -> DataFrame:
             F.lit("hex"),
         ).alias("hb"),
     )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 128,
-    n: int = 3,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 42,
-    shingle_hash: str = "xxhash64",
-    partitions: int | None = None,
-) -> DataFrame:
-    """(doc_id, sig ARRAY<BIGINT>[num_hashes]).
-
-    Two-stage hot path: (1) one JVM pass hashes each shingle string to
-    int64 (xxhash64 — strings never leave the JVM; only compact int64
-    arrays cross Arrow), (2) a vectorized numpy pandas stage computes
-    all num_hashes permutation-mins per doc with one outer-product
-    multiply-add (uint64 wraparound). A pure expression-tree version
-    (128 interpreted lambda passes per shingle) is ~20× slower.
-    """
-    sh = with_shingles(docs, n, id_col=id_col, text_col=text_col)
-    hexpr = _shingle_hash_expr(shingle_hash)
-    packed = _packed_hashes(sh, hexpr, partitions)
-    a, b = _minhash_params(num_hashes, seed)
-
-    def _sig(batches):
-        for pdf in batches:
-            hs_list = [
-                np.frombuffer(bb, dtype=">i8").astype(np.int64)
-                for bb in pdf["hb"]
-            ]
-            out = _batch_minhash(hs_list, a, b, num_hashes)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sig": [row for row in out.astype(np.int64)],
-                }
-            )
-
-    return packed.mapInPandas(_sig, "doc_id long, sig array<long>")
 
 
 def _batch_minhash(hs_list, a, b, num_hashes: int) -> np.ndarray:
@@ -610,19 +486,11 @@ def minhash_lsh_pairs(
     # banding pipeline compute once for both passes. Zero extra plan
     # when the cap is off (the default).
     if bucket_width_max is None:
-        conf_cap = banded.sparkSession.conf.get(
-            "spark.hippollm.lsh.bucketWidthMax", ""
+        bucket_width_max = plan.conf_int(
+            banded.sparkSession, "spark.hippollm.lsh.bucketWidthMax", None
         )
-        if conf_cap:
-            try:
-                bucket_width_max = int(conf_cap)
-            except ValueError as exc:
-                raise ValueError(
-                    "spark.hippollm.lsh.bucketWidthMax must be an int, got "
-                    f"{conf_cap!r}"
-                ) from exc
     if bucket_width_max is not None and bucket_width_max > 0:
-        banded = plan_barrier(banded)
+        banded = plan.barrier(banded)
         sane = (
             banded.groupBy("band_idx", "band_hash")
             .agg(F.count("*").alias("__w__"))
@@ -686,7 +554,7 @@ def simhash64(
         F.col(id_col).alias("doc_id"),
         F.split(normalized_text(text_col), " ").alias("__toks__"),
     )
-    packed = _cpu_spread(toks, partitions).select(
+    packed = plan.spread(toks, partitions).select(
         "doc_id",
         F.to_binary(
             F.concat_ws(
@@ -784,13 +652,13 @@ def simhash_block_pairs(
     # md5 + the 61-column aggregation) executes twice — the r11 plan
     # showed the full chain duplicated under the join (guide §2.3:
     # don't compute twice). The frame is (doc_id, simhash) = 16
-    # bytes/doc. r12 (VERDICT r11 #4): an eager plan_barrier, NOT
+    # bytes/doc. r12 (VERDICT r11 #4): an eager plan.barrier, NOT
     # .cache() — the cache was a CacheManager pin that only the
     # caller's session hygiene ever released, so repeated library calls
     # accumulated executor storage; checkpoint blocks are reaped by the
     # ContextCleaner as soon as the returned frame is GC'd, and the
     # eager build also removes the two join sides' first-touch race.
-    fp = plan_barrier(fp, eager=True)
+    fp = plan.barrier(fp, eager=True)
     block_bits = n_bits // 4
     mask = (1 << block_bits) - 1
     blocks = fp.select(
@@ -1032,13 +900,10 @@ def dedup_canonicalize(
     # round (measured: 7s/round of pure planning vs <1s of work).
     # Checkpointing reduces the loop's base to a leaf; the pairs
     # computation runs once either way.
-    ecp = plan_barrier(e, eager=True)
-    try:
-        gate = int(
-            spark.conf.get("spark.hippollm.dedup.canonicalize.collectEdgeMax", "")
-        )
-    except ValueError:
-        gate = 1_000_000
+    ecp = plan.barrier(e, eager=True)
+    gate = plan.conf_int(
+        spark, "spark.hippollm.dedup.canonicalize.collectEdgeMax", 1_000_000
+    )
     if gate > 0:
         # limit(gate+1) on the checkpoint leaf: if it comes back with
         # <= gate rows we already hold the WHOLE edge list — no second
@@ -1082,7 +947,7 @@ def dedup_canonicalize(
     edges = (
         ecp.union(ecp.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .transform(lambda d: plan_barrier(d, eager=True))
+        .transform(lambda d: plan.barrier(d, eager=True))
     )
     n_e = edges.count()  # cheap on the checkpoint; gates the label broadcast
     pin = labels = (
@@ -1090,18 +955,19 @@ def dedup_canonicalize(
         .distinct()
         .withColumn("label", F.col("doc_id"))
     ).cache()
-    from hippollm_spark.operators.graph import _bc, _loop_tuning
-
-    with _loop_tuning(pairs.sparkSession, n_e):
+    with plan.loop_tuning(pairs.sparkSession, n_e):
         for it in range(max_iter):
             nbr_min = (
-                edges.join(_bc(labels.withColumnRenamed("doc_id", "dst"), n_e), "dst")
+                edges.join(
+                    plan.broadcast_if(labels.withColumnRenamed("doc_id", "dst"), n_e),
+                    "dst",
+                )
                 .groupBy("src")
                 .agg(F.min("label").alias("nbr_label"))
                 .withColumnRenamed("src", "doc_id")
             )
             merged_cache = merged = (
-                labels.join(_bc(nbr_min, n_e), "doc_id", "left")
+                labels.join(plan.broadcast_if(nbr_min, n_e), "doc_id", "left")
                 .select(
                     "doc_id",
                     F.least(
@@ -1111,7 +977,7 @@ def dedup_canonicalize(
                 )
             ).cache()
             if it % checkpoint_every == checkpoint_every - 1:
-                merged = plan_barrier(merged, eager=True)
+                merged = plan.barrier(merged, eager=True)
             changed = merged.filter(F.col("__chg__")).limit(1).count()
             pin.unpersist()  # previous round's label table, now superseded
             pin = merged_cache
@@ -1126,9 +992,7 @@ def dedup_canonicalize(
     # convergence counts already materialized every row, so this
     # checkpoint costs one tiny job and makes the result a leaf.
     out = labels.withColumnRenamed("label", "canonical_id")
-    sealed = plan_barrier(out, eager=True)
-    pin.unpersist()  # sealed result is a leaf; release the last pin
-    return sealed
+    return plan.seal(out, [pin])
 
 
 def apply_dedup(
@@ -1453,7 +1317,7 @@ def duplicated_span_stats(
     # pre-shuffle stage (measured r11: 0.99 s + 0.59 s single-task
     # stages at sf0.1; guide §2.2). Stats-gated no-op on inputs with
     # enough native splits.
-    t = _cpu_spread(docs, None).select(
+    t = plan.spread(docs).select(
         F.col(id_col).alias("doc_id"),
         F.split(normalized_text(text_col), " ").alias("__toks__"),
     )
@@ -1639,7 +1503,7 @@ def containment_pairs(
             "state; set max_shingle_df on large or boilerplate-heavy "
             "corpora",
         )
-    docs = _cpu_spread(docs, None)
+    docs = plan.spread(docs)
     sh = with_shingles(docs, n, id_col=id_col, text_col=text_col)
     ex = sh.select(
         "doc_id",
@@ -1815,7 +1679,7 @@ def incremental_dedup(
         id_col=id_col, text_col=text_col,
         shingle_hash=shingle_hash, partitions=partitions,
     )
-    banded_new = plan_barrier(banded_new, eager=True)
+    banded_new = plan.barrier(banded_new, eager=True)
     idx = spark.table(f"{table_prefix}_bands")
     nb = banded_new.select(
         F.col("doc_id").alias("doc_new"), "band_idx", "band_hash"
@@ -1882,7 +1746,7 @@ def incremental_dedup(
         )
     )
     if update_index:
-        verified = plan_barrier(verified, eager=True)
+        verified = plan.barrier(verified, eager=True)
         dups = verified.select("doc_id").distinct()
         keep_bands = banded_new.join(dups, "doc_id", "left_anti")
         keep_sh = sh_new.join(dups, "doc_id", "left_anti")

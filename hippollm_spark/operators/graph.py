@@ -11,27 +11,20 @@ DataFrame (fact_id, entity) makes every graph op a join:
 Scale notes: edges is two narrow columns — at 100 TB of documents the
 edge table is orders of magnitude smaller than the fact payloads, so we
 join on edges and only rejoin payloads at the end. Frontier joins cache
-+ localCheckpoint per hop to cut lineage growth.
++ a plan barrier per hop to cut lineage growth.
 """
 
 from __future__ import annotations
 
-import threading
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .ranks import distributed_rank
+from hippollm_spark import plan
 
-# A loop state table at or below this row count is broadcast into the
-# per-round joins (checkpoint leaves have no size statistics, so the
-# planner would otherwise exchange the big cached edge list every
-# round); above it, the shuffle join is the right plan and the hint is
-# withheld. ~2M rows of (vertex, long) is tens of MB serialized.
-_BROADCAST_STATE_MAX = 2_000_000
+from .ranks import distributed_rank
 
 # triangle_stats broadcast-adjacency gates (round 11: no longer a
 # box-sized constant — ADVICE r10). The integer-encoded out-adjacency
@@ -55,16 +48,6 @@ _INTERSECT_EDGE_MAX = 150_000_000
 _WEDGE_MATERIALIZE_MAX = 150_000_000
 _ADJ_BYTES_PER_EDGE = 64
 _ADJ_HEAP_FRACTION = 0.20
-
-
-def _bc(df: DataFrame, n: int) -> DataFrame:
-    """Broadcast hint gated on a row-count BOUND for the frame being
-    broadcast (see above). Callers must pass a bound on THIS frame's
-    rows — the vertex count for per-vertex state tables (which can
-    hold up to 2·|E| rows when vertices come from src ∪ dst), not the
-    edge count — because an explicit hint bypasses
-    autoBroadcastJoinThreshold entirely."""
-    return F.broadcast(df) if n <= _BROADCAST_STATE_MAX else df
 
 
 _MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -106,94 +89,13 @@ def _intersect_edge_gate(spark) -> int:
     `_ADJ_BYTES_PER_EDGE` bytes/edge (two broadcast copies + the
     deserialized array relation). Session override:
     ``spark.hippollm.triangles.intersectEdgeMax``."""
-    conf_v = spark.conf.get("spark.hippollm.triangles.intersectEdgeMax", None)
+    conf_v = plan.conf_int(spark, "spark.hippollm.triangles.intersectEdgeMax", None)
     if conf_v is not None:
-        return int(conf_v)
+        return conf_v
     heap = _jvm_heap_bytes(spark)
     if heap is None:
         return _INTERSECT_EDGE_MAX
     return int(heap * _ADJ_HEAP_FRACTION / _ADJ_BYTES_PER_EDGE)
-
-
-# _loop_tuning mutates two SESSION-global confs; the lock + PER-SESSION
-# depth counters make overlapping loops safe (first entrant on a
-# session saves, last exiter on that session restores — no torn
-# save/restore can leave the narrowed settings applied permanently,
-# and two sessions looping concurrently in one process each get their
-# own save/set/restore instead of the first session's saved values
-# leaking onto the second). A query running CONCURRENTLY on the same
-# SparkSession still observes the loop's settings for its duration —
-# that is inherent to session-scoped conf and documented in the
-# contextmanager docstring.
-_TUNING_LOCK = threading.Lock()
-# id(spark) -> [depth, (saved_aqe, saved_partitions)]; entries are
-# removed at depth 0, so a dead session never pins stale state.
-_TUNING_STATE: dict[int, list] = {}
-
-
-@contextmanager
-def _loop_tuning(spark, n_keys: int):
-    """Planner settings scoped to a fixed-shape iterative loop: the
-    2·iterations jobs have KNOWN shapes (edge scan + small-key
-    aggregate, usually with a broadcast state join), so AQE re-planning
-    per job buys nothing and costs a driver round-trip per stage, and
-    the default shuffle width schedules 32 near-empty tasks per
-    exchange. Partitions are sized to the loop's key volume (floor 8,
-    ceiling the session conf — a 100-TB graph keeps the caller's
-    sizing). Both settings restored on exit, exception or not.
-
-    Concurrency: the confs are session-global. Overlapping loops are
-    refcounted PER SESSION (outermost entrant on a session saves+sets,
-    last exiter on that session restores — inner loops inherit the
-    outer sizing), so no interleaving can leave the narrowed settings
-    stuck, and concurrent loops on two different sessions each tune
-    and restore their own session. An unrelated query running
-    concurrently on the same session DOES see AQE off and the narrowed
-    partitions for the loop's duration; callers mixing iterative graph
-    ops with concurrent wide queries on one session should run the
-    graph op on its own session."""
-    key = id(spark)
-    with _TUNING_LOCK:
-        state = _TUNING_STATE.get(key)
-        if state is None:
-            sp0 = spark.conf.get("spark.sql.shuffle.partitions")
-            saved = (
-                spark.conf.get("spark.sql.adaptive.enabled"),
-                sp0,
-            )
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(8, min(int(sp0), n_keys // 250_000))),
-            )
-            _TUNING_STATE[key] = [1, saved]
-        else:
-            state[0] += 1
-    try:
-        yield
-    finally:
-        with _TUNING_LOCK:
-            state = _TUNING_STATE[key]
-            state[0] -= 1
-            if state[0] == 0:
-                saved = state[1]
-                spark.conf.set("spark.sql.adaptive.enabled", saved[0])
-                spark.conf.set("spark.sql.shuffle.partitions", saved[1])
-                del _TUNING_STATE[key]
-
-
-def _seal(df: DataFrame, pins: Sequence[DataFrame]) -> DataFrame:
-    """Cut an iterative op's result free of its loop lineage (eager
-    localCheckpoint — the inputs are already cache-resident from the
-    loop's own actions, so this is one cheap materialization of the
-    final table) and release every loop cache pin. Without the
-    unpersist, CacheManager holds the pinned edge/label blocks until
-    the session dies — they accumulate across queries in a long
-    session (the bfs unpersist discipline, applied at function exit)."""
-    out = df.localCheckpoint(eager=True)
-    for p in pins:
-        p.unpersist()
-    return out
 
 
 def neighbours(edges: DataFrame, entity: str, *, sort_facts: bool = True) -> DataFrame:
@@ -254,10 +156,10 @@ def explore(
     # prune: the dst arm re-joins the FULL edge view on fact_id, so an
     # edge view that is itself a join gets rebuilt once per hop.
     # `persist_edges=True` caches it once instead (pin released by
-    # _seal) — measured r11 on the uncapped 2-hop g2 shape over the
+    # plan.seal) — measured r11 on the uncapped 2-hop g2 shape over the
     # lineitem⋈part view: 3.76 s → 3.32 s mean, interleaved A/B; use
     # it for uncapped multi-hop walks whose edge view is expensive.
-    pins = []  # per-hop cache pins, released at exit via _seal
+    pins = []  # per-hop cache pins, released at exit via plan.seal
     if persist_edges:
         edges = edges.cache()
         pins.append(edges)
@@ -289,7 +191,7 @@ def explore(
             )
         # Hop outputs are reused three times (early-exit probe, result
         # union, next frontier): cache() gives the reuse without the
-        # eager extra job of localCheckpoint. Past ``checkpoint_after``
+        # eager extra job of a barrier. Past ``checkpoint_after``
         # hops, ALSO cut lineage — plans grow multiplicatively with
         # depth and deep traversals re-plan forever otherwise. The FINAL
         # hop is consumed exactly once (the result union; the loop
@@ -300,7 +202,7 @@ def explore(
             links = links.cache()
             pins.append(links)
             if depth >= checkpoint_after:
-                links = links.localCheckpoint(eager=True)
+                links = plan.barrier(links, eager=True)
         results = links if results is None else results.unionByName(links)
         if depth == max_depth:
             break  # last hop: the next frontier would never be expanded
@@ -322,12 +224,12 @@ def explore(
     # Keep first (shallowest) discovery of each (src,dst) pair. min_by
     # instead of a row_number window: a hash aggregate with partial
     # (map-side) combine, no sort — (src,dst,depth) is unique per hop so
-    # there are no ties for min_by to break arbitrarily. _seal
+    # there are no ties for min_by to break arbitrarily. plan.seal
     # materializes that final aggregate once (the work the caller's
     # action would do anyway lands here) and releases the per-hop cache
     # pins, so traversals don't accumulate pinned hop blocks across a
     # long session.
-    return _seal(
+    return plan.seal(
         results.groupBy("src", "dst")
         .agg(F.min_by(F.struct("n_facts", "fact_ids", "depth"), "depth").alias("__f__"))
         .select("src", "dst", "__f__.n_facts", "__f__.fact_ids", "__f__.depth"),
@@ -386,20 +288,20 @@ def connected_components(
     # is equal across a round IFF no label changed.
     label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     prev_sum = labels.agg(label_sum).first()["s"]  # also builds the pin
-    with _loop_tuning(edges.sparkSession, n_inc):
+    with plan.loop_tuning(edges.sparkSession, n_inc):
         for it in range(max_iter):
             fact_min = (
-                edges.join(_bc(labels, n_inc), "entity")
+                edges.join(plan.broadcast_if(labels, n_inc), "entity")
                 .groupBy("fact_id")
                 .agg(F.min("label").alias("fact_label"))
             )
             new_cache = new_labels = (
-                edges.join(_bc(fact_min, n_inc), "fact_id")
+                edges.join(plan.broadcast_if(fact_min, n_inc), "fact_id")
                 .groupBy("entity")
                 .agg(F.min("fact_label").alias("label"))
             ).cache()
             if it % checkpoint_every == checkpoint_every - 1:
-                new_labels = new_labels.localCheckpoint(eager=True)
+                new_labels = plan.barrier(new_labels, eager=True)
             cur_sum = new_labels.agg(label_sum).first()["s"]
             pin.unpersist()  # previous round's label table, now superseded
             pin = new_cache
@@ -407,7 +309,7 @@ def connected_components(
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
-    return _seal(labels.withColumnRenamed("label", "component"), [edges, pin])
+    return plan.seal(labels.withColumnRenamed("label", "component"), [edges, pin])
 
 
 def connected_components_star(
@@ -457,12 +359,12 @@ def connected_components_star(
         F.xxhash64("entity").alias("u"), F.col("fact_id").alias("f")
     )
     fact_min = inc.groupBy("f").agg(F.min("u").alias("v"))
-    e = (
+    e = plan.barrier(
         inc.join(fact_min, "f")
         .select("u", "v")
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     n0 = e.count()  # contracted edge count; sizes the loop shuffles
     # the per-round min tables hold one row per vertex in the current
@@ -478,7 +380,7 @@ def connected_components_star(
             F.least(F.min("v"), F.first("u")).alias("m")
         )
         return (
-            sym.join(_bc(m, n_m), "u")
+            sym.join(plan.broadcast_if(m, n_m), "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .distinct()
@@ -491,7 +393,7 @@ def connected_components_star(
         m = d.groupBy("u").agg(F.min("v").alias("m"))
         nbrs = d.unionAll(m.select(F.col("u"), F.col("u").alias("v")))
         return (
-            nbrs.join(_bc(m, n_m), "u")
+            nbrs.join(plan.broadcast_if(m, n_m), "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
@@ -501,12 +403,12 @@ def connected_components_star(
     n_prev = n0  # carry the round's edge count: e.count() re-ran a job
     # per round on the previous round's frame whose count was already
     # known (r11; result-identical, one fewer action per round)
-    with _loop_tuning(edges.sparkSession, n0):
+    with plan.loop_tuning(edges.sparkSession, n0):
         for r in range(max_rounds):
             nxt = _small_star(_large_star(e))
             nxt_pin = None
             if r % checkpoint_every == checkpoint_every - 1:
-                nxt = nxt.localCheckpoint(eager=True)
+                nxt = plan.barrier(nxt, eager=True)
             else:
                 nxt_pin = nxt = nxt.cache()
             # exact set-fixpoint check: counts equal and no new rows
@@ -529,7 +431,7 @@ def connected_components_star(
     # per entity (with the best label so far, like hash-min's capped
     # exit) instead of emitting duplicates. At fixpoint it is a no-op
     # aggregation over single rows.
-    return _seal(
+    return plan.seal(
         ents.join(e, ents.eid == e.u, "left")
         .groupBy("entity")
         .agg(F.min(F.coalesce("v", "eid")).alias("component")),
@@ -617,7 +519,7 @@ def pagerank(
     Shape per iteration: one join ranks⨝edges (both sides keyed on
     the vertex domain — consecutive iterations reuse the hash
     partitioning) and one aggregation shuffle on dst. Lineage is cut
-    with localCheckpoint every ``checkpoint_every`` iterations, the
+    with a barrier every ``checkpoint_every`` iterations, the
     standard iterative-DataFrame discipline (an unbounded plan tree
     re-optimizes and re-executes from the scan each pass).
 
@@ -662,12 +564,9 @@ def pagerank(
     verts = vert_ids
     n = verts.count()
     if n == 0:
-        empty = verts.withColumn(
-            "rank_scaled", F.lit(0).cast("long")
-        ).localCheckpoint(eager=True)
-        e.unpersist()
-        vert_ids.unpersist()
-        return empty
+        return plan.seal(
+            verts.withColumn("rank_scaled", F.lit(0).cast("long")), [e, vert_ids]
+        )
     if seeds is None:
         r0 = scale // n
         verts = verts.withColumn("_r0", F.lit(r0).cast("long"))
@@ -688,17 +587,17 @@ def pagerank(
     ranks = verts.select("vertex", F.col("_r0").alias("rank_scaled"))
     # rank/contrib frames are checkpoint leaves with no size stats —
     # broadcast them (count-gated) so the cached edge list is never
-    # exchanged per round; AQE/partition tuning per _loop_tuning
-    with _loop_tuning(edges.sparkSession, n):
+    # exchanged per round; AQE/partition tuning per plan.loop_tuning
+    with plan.loop_tuning(edges.sparkSession, n):
         for it in range(iterations):
             contrib = (
-                pre.join(_bc(ranks, n), pre.src == ranks.vertex)
+                pre.join(plan.broadcast_if(ranks, n), pre.src == ranks.vertex)
                 .select("dst", F.expr("(rank_scaled * w) div outdeg").alias("c"))
                 .groupBy("dst")
                 .agg(F.sum("c").alias("s"))
             )
             ranks = verts.join(
-                _bc(contrib, n), verts.vertex == contrib.dst, "left"
+                plan.broadcast_if(contrib, n), verts.vertex == contrib.dst, "left"
             ).select(
                 "vertex",
                 (
@@ -707,8 +606,8 @@ def pagerank(
                 ).cast("long").alias("rank_scaled"),
             )
             if it % checkpoint_every == checkpoint_every - 1:
-                ranks = ranks.localCheckpoint(eager=True)
-    return _seal(ranks, [e, vert_ids, verts, pre])
+                ranks = plan.barrier(ranks, eager=True)
+    return plan.seal(ranks, [e, vert_ids, verts, pre])
 
 
 def triangle_stats(
@@ -741,7 +640,7 @@ def triangle_stats(
     wedges, whose string-pair shuffle (~200 GB) filled the disk. When
     the graph is small enough to hold its out-adjacency in a broadcast
     (edge count ≤ _INTERSECT_EDGE_MAX and vertex count ≤
-    _BROADCAST_STATE_MAX), triangles are counted WITHOUT materializing
+    plan.BROADCAST_STATE_MAX), triangles are counted WITHOUT materializing
     any wedge: per oriented edge (u,v), |N⁺(u) ∩ N⁺(v)| via
     array_intersect over integer-encoded broadcast adjacency — each
     triangle has exactly one source vertex with two out-edges, so the
@@ -755,8 +654,8 @@ def triangle_stats(
 
     EAGER (round 11, ADVICE r10): this operator EXECUTES at call time
     — a small stats job picks the strategy, then the census itself
-    runs and the one-row result is sealed (`_seal`: eager
-    localCheckpoint + unpersist of every internal cache pin). The
+    runs and the one-row result is sealed (`plan.seal`: eager
+    barrier + unpersist of every internal cache pin). The
     returned DataFrame is a consistent SNAPSHOT of the input as of the
     call — n_triangles and n_wedges come from the same cached edge
     canonicalization — and leaves no storage pinned behind, so
@@ -769,18 +668,16 @@ def triangle_stats(
     if intersect_edge_max is None:
         intersect_edge_max = _intersect_edge_gate(spark)
     if broadcast_state_max is None:
-        broadcast_state_max = int(
-            spark.conf.get(
-                "spark.hippollm.triangles.broadcastStateMax",
-                str(_BROADCAST_STATE_MAX),
-            )
+        broadcast_state_max = plan.conf_int(
+            spark,
+            "spark.hippollm.triangles.broadcastStateMax",
+            plan.BROADCAST_STATE_MAX,
         )
     if wedge_materialize_max is None:
-        wedge_materialize_max = int(
-            spark.conf.get(
-                "spark.hippollm.triangles.wedgeMaterializeMax",
-                str(_WEDGE_MATERIALIZE_MAX),
-            )
+        wedge_materialize_max = plan.conf_int(
+            spark,
+            "spark.hippollm.triangles.wedgeMaterializeMax",
+            _WEDGE_MATERIALIZE_MAX,
         )
     a, b = F.col(src_col), F.col(dst_col)
     canon = (
@@ -791,7 +688,7 @@ def triangle_stats(
         .distinct()
         .cache()
         # ^ consumed by deg, the wedge join, and the closing semi-join:
-        #   inline pipelined materialization; released by _seal at exit
+        #   inline pipelined materialization; released by plan.seal at exit
     )
     deg = (
         canon.select(F.col("a").alias("v"))
@@ -895,7 +792,7 @@ def triangle_stats(
     # triangle job actually runs) and release every internal pin —
     # canon, deg, oriented — so library callers invoking triangle_stats
     # repeatedly don't accumulate executor storage (ADVICE r10).
-    return _seal(
+    return plan.seal(
         tri.select(
             "n_triangles",
             F.lit(n_wedges).cast("long").alias("n_wedges"),
@@ -929,7 +826,7 @@ def shortest_paths(
     at distance d) to the edge list, anti-join out already-settled
     vertices, settle the remainder at d+1. Each round is one hash join
     + one anti-join on narrow (vertex) keys; the frontier is cached
-    and the settled set localCheckpoint'ed every ``checkpoint_every``
+    and the settled set barriered every ``checkpoint_every``
     rounds to cut lineage. Early exit when a frontier lands empty (the
     count is already materialized by the cache — no extra job).
 
@@ -953,10 +850,10 @@ def shortest_paths(
     # frontier can reach |V| ≈ 2·|E| rows, so the edge count is not a
     # valid bound for the frame actually being shipped
     n_f = len(seed_list)
-    with _loop_tuning(spark, n_e):
+    with plan.loop_tuning(spark, n_e):
         for d in range(1, max_depth + 1):
             reached = (
-                e.join(_bc(frontier, n_f), e.src == frontier.vertex)
+                e.join(plan.broadcast_if(frontier, n_f), e.src == frontier.vertex)
                 .select(F.col("dst").alias("vertex"))
                 .distinct()
             )
@@ -969,10 +866,10 @@ def shortest_paths(
                 nxt.withColumn("dist", F.lit(d).cast("int"))
             )
             if d % checkpoint_every == 0:
-                settled = settled.localCheckpoint(eager=True)
+                settled = plan.barrier(settled, eager=True)
             frontier.unpersist()
             frontier = nxt
-    return _seal(settled, [e, frontier])
+    return plan.seal(settled, [e, frontier])
 
 
 def entity_jaccard(
@@ -1085,10 +982,10 @@ def label_propagation(
     # threshold; an exact labels.count() would buy a tighter gate at
     # the cost of an extra job per call)
     n_v = 2 * n_e
-    with _loop_tuning(edges.sparkSession, n_e):
+    with plan.loop_tuning(edges.sparkSession, n_e):
         for it in range(iterations):
             counted = (
-                e.join(_bc(labels, n_v), e.src == labels.vertex)
+                e.join(plan.broadcast_if(labels, n_v), e.src == labels.vertex)
                 .groupBy("dst", "label")
                 .agg(F.count("*").alias("cnt"))
             )
@@ -1100,13 +997,13 @@ def label_propagation(
                 .agg(F.min("label").alias("new_label"))
             )
             labels = labels.join(
-                _bc(pick, n_v), labels.vertex == pick.dst, "left"
+                plan.broadcast_if(pick, n_v), labels.vertex == pick.dst, "left"
             ).select(
                 "vertex", F.coalesce("new_label", "label").alias("label")
             )
             if it % checkpoint_every == checkpoint_every - 1:
-                labels = labels.localCheckpoint(eager=True)
-    return _seal(labels, [e, init])
+                labels = plan.barrier(labels, eager=True)
+    return plan.seal(labels, [e, init])
 
 
 def bellman_ford(
@@ -1130,7 +1027,7 @@ def bellman_ford(
     Per round: one dist⨝edges join, one min-per-dst aggregate, one
     left join back — all narrow (vertex, dist) shuffles; consecutive
     rounds reuse the vertex-domain hash partitioning, lineage cut via
-    localCheckpoint. After k rounds distances are exact for all
+    a barrier. After k rounds distances are exact for all
     shortest paths of ≤ k edges (full convergence at k = longest
     shortest path, the standard bound). Semantics: only vertices
     reachable within ``rounds`` edges appear.
@@ -1152,10 +1049,10 @@ def bellman_ford(
     # counting dist per round would cost an extra job, and 2·n_e is a
     # valid (conservative) ceiling for the shipped frame
     n_d = 2 * n_e
-    with _loop_tuning(spark, n_e):
+    with plan.loop_tuning(spark, n_e):
         for r in range(rounds):
             relaxed = (
-                e.join(_bc(dist, n_d), e.src == dist.vertex)
+                e.join(plan.broadcast_if(dist, n_d), e.src == dist.vertex)
                 .select(F.col("dst").alias("vertex"), (F.col("dist") + F.col("w")).alias("d"))
                 .groupBy("vertex")
                 .agg(F.min("d").alias("d"))
@@ -1178,8 +1075,8 @@ def bellman_ford(
                 "vertex", F.least("dist", "d").alias("dist")
             )
             if r % checkpoint_every == checkpoint_every - 1:
-                dist = dist.localCheckpoint(eager=True)
-    return _seal(dist, [e])
+                dist = plan.barrier(dist, eager=True)
+    return plan.seal(dist, [e])
 
 
 def k_core(
@@ -1204,7 +1101,7 @@ def k_core(
     directions present); degree = count of out-neighbours.
 
     Scale shape per round: one groupBy degree count on the edge key +
-    two semi-joins — all narrow-key hash shuffles; `localCheckpoint`
+    two semi-joins — all narrow-key hash shuffles; a barrier
     every few rounds cuts the nested plan (the `dedup_canonicalize`
     discipline). Output: (vertex, degree) for the surviving k-core.
     """
@@ -1213,16 +1110,16 @@ def k_core(
     # computes once; later rounds operate on the cached pruned set
     pin = e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
     n0 = e.count()  # materializes the pin; gates the keep-set broadcasts
-    with _loop_tuning(edges.sparkSession, n0):
+    with plan.loop_tuning(edges.sparkSession, n0):
         for r in range(rounds):
             deg = e.groupBy("src").agg(F.count("*").alias("degree"))
             keep = deg.filter(F.col("degree") >= k).select("src")
-            pruned = e.join(_bc(keep, n0), "src", "left_semi").join(
-                _bc(keep.withColumnRenamed("src", "dst"), n0), "dst", "left_semi"
+            pruned = e.join(plan.broadcast_if(keep, n0), "src", "left_semi").join(
+                plan.broadcast_if(keep.withColumnRenamed("src", "dst"), n0), "dst", "left_semi"
             )
             pruned_pin = None
             if r % checkpoint_every == checkpoint_every - 1:
-                pruned = pruned.localCheckpoint(eager=True)
+                pruned = plan.barrier(pruned, eager=True)
             else:
                 pruned_pin = pruned = pruned.cache()
             done = pruned.count() == e.count()
@@ -1232,7 +1129,7 @@ def k_core(
             e = pruned
             if done:
                 break
-    return _seal(
+    return plan.seal(
         e.groupBy("src")
         .agg(F.count("*").alias("degree"))
         .filter(F.col("degree") >= k)
@@ -1306,14 +1203,14 @@ def hits(
     # cost an extra ~1 s job per call for a tighter gate nobody needs)
     n_v = 2 * n_e
     if n_e == 0:
-        empty = verts.select(
-            "vertex",
-            F.lit(0).cast("long").alias("hub_scaled"),
-            F.lit(0).cast("long").alias("auth_scaled"),
-        ).localCheckpoint(eager=True)
-        e.unpersist()
-        verts.unpersist()
-        return empty
+        return plan.seal(
+            verts.select(
+                "vertex",
+                F.lit(0).cast("long").alias("hub_scaled"),
+                F.lit(0).cast("long").alias("auth_scaled"),
+            ),
+            [e, verts],
+        )
     state = verts.select(
         "vertex",
         F.lit(scale).cast("long").alias("hub_scaled"),
@@ -1337,7 +1234,7 @@ def hits(
             ),
         )
 
-    with _loop_tuning(edges.sparkSession, n_e):
+    with plan.loop_tuning(edges.sparkSession, n_e):
         for it in range(iterations):
             # authority pass: sum hubs over in-edges. Checkpoint the
             # RAW sums BEFORE _norm: the max aggregate and the
@@ -1346,7 +1243,7 @@ def hits(
             # level).
             auth_raw = (
                 e.join(
-                    _bc(
+                    plan.broadcast_if(
                         state.select(F.col("vertex").alias("src"), "hub_scaled"),
                         n_v,
                     ),
@@ -1355,38 +1252,41 @@ def hits(
                 .groupBy("dst")
                 .agg(F.sum("hub_scaled").alias("__a__"))
             )
-            auth_pre = (
-                verts.join(_bc(auth_raw, n_v), verts.vertex == auth_raw.dst, "left")
-                .select(
+            # lazy: _norm's max aggregate is the next action and
+            # materializes the checkpoint in the SAME job — one
+            # materialization per half-round instead of two
+            auth_pre = plan.barrier(
+                verts.join(
+                    plan.broadcast_if(auth_raw, n_v), verts.vertex == auth_raw.dst, "left"
+                ).select(
                     "vertex",
                     F.coalesce("__a__", F.lit(0)).cast("long").alias("__a__"),
                 )
-                # lazy: _norm's max aggregate is the next action and
-                # materializes the checkpoint in the SAME job — one
-                # materialization per half-round instead of two
-                .localCheckpoint(eager=False)
             )
             auth = _norm(auth_pre, "__a__")  # projection over a leaf
             # hub pass: sum NEW authorities over out-edges
             hub_raw = (
                 e.join(
-                    _bc(auth.select(F.col("vertex").alias("dst"), "__a__"), n_v),
+                    plan.broadcast_if(
+                        auth.select(F.col("vertex").alias("dst"), "__a__"), n_v
+                    ),
                     "dst",
                 )
                 .groupBy("src")
                 .agg(F.sum("__a__").alias("__h__"))
             )
-            hub_pre = (
-                verts.join(_bc(hub_raw, n_v), verts.vertex == hub_raw.src, "left")
-                .select(
+            hub_pre = plan.barrier(
+                verts.join(
+                    plan.broadcast_if(hub_raw, n_v), verts.vertex == hub_raw.src, "left"
+                ).select(
                     "vertex",
                     F.coalesce("__h__", F.lit(0)).cast("long").alias("__h__"),
                 )
-                .localCheckpoint(eager=False)
             )
             hub = _norm(hub_pre, "__h__")
             state = hub.withColumnRenamed("__h__", "hub_scaled").join(
-                _bc(auth.withColumnRenamed("__a__", "auth_scaled"), n_v), "vertex"
+                plan.broadcast_if(auth.withColumnRenamed("__a__", "auth_scaled"), n_v),
+                "vertex",
             )
     # the final state derives only from the per-half-round checkpoint
     # leaves, so the loop pins can be released without a seal pass
@@ -1429,10 +1329,11 @@ def random_walks(
         .distinct()
     )
     w_rank = Window.partitionBy("v").orderBy("n")
-    adj = (
-        e.withColumn("__i__", F.row_number().over(w_rank) - 1)
-        .withColumn("__deg__", F.count("*").over(Window.partitionBy("v")))
-        .localCheckpoint(eager=True)
+    adj = plan.barrier(
+        e.withColumn("__i__", F.row_number().over(w_rank) - 1).withColumn(
+            "__deg__", F.count("*").over(Window.partitionBy("v"))
+        ),
+        eager=True,
     )
     # origins = ALL vertices (src ∪ dst): sinks still yield their
     # single-node walk, like DeepWalk starting from every node.
@@ -1451,9 +1352,9 @@ def random_walks(
         F.col("__w__"),
         F.col("v").alias("vertex"),
     )
-    results = frontier.select(
-        "walk_id", F.lit(0).alias("step"), "vertex"
-    ).localCheckpoint(eager=True)
+    results = plan.barrier(
+        frontier.select("walk_id", F.lit(0).alias("step"), "vertex"), eager=True
+    )
     # one row per vertex: lets each step compute its picked index
     # BEFORE touching the adjacency, so the step join is an equi-join
     # on (vertex, index) producing exactly one row per walk — joining
@@ -1496,7 +1397,7 @@ def random_walks(
             )
         )
         if t % checkpoint_every == checkpoint_every - 1 or t == walk_length:
-            nxt = nxt.localCheckpoint(eager=True)
+            nxt = plan.barrier(nxt, eager=True)
         else:
             nxt = nxt.cache()
             pins.append(nxt)
@@ -1504,4 +1405,4 @@ def random_walks(
             nxt.select("walk_id", F.lit(t).alias("step"), "vertex")
         )
         cur = nxt
-    return _seal(results, pins)
+    return plan.seal(results, pins)

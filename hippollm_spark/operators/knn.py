@@ -123,18 +123,20 @@ def knn_facts_with_ids(
     anyway). Collect the ids once and filter with a literal IN-set
     instead: one execution of the candidate pipeline, and the main job
     carries no broadcast build (guide §1.2/§2.4 — don't compute things
-    twice). Past ``collect_max`` ids the old count + broadcast
-    semi-join shape runs unchanged (the guard stays cheap because the
-    reference's candidate sets are entity adjacencies, i.e. small).
+    twice). Past ``max(collect_max, k)`` ids the candidates stay a
+    broadcast semi-join: the probe's overflow already proves
+    |candidates| > k, so the guard needs no count and the candidate
+    pipeline runs twice, not three times (the guard stays cheap
+    because the reference's candidate sets are entity adjacencies,
+    i.e. small).
     """
     cand_col = candidate_ids.columns[0]
     cands = candidate_ids.withColumnRenamed(cand_col, id_col).distinct()
-    rows = cands.limit(collect_max + 1).collect()
-    if len(rows) > collect_max:
-        n = cands.count()
+    cap = max(collect_max, k)
+    rows = cands.limit(cap + 1).collect()
+    if len(rows) > cap:
         filtered = facts.join(F.broadcast(cands), on=id_col, how="semi")
     else:
-        n = len(rows)
         # Rebuild the (already distinct) candidate set as a LOCAL
         # relation and semi-join against that: identical survivors, but
         # the main job no longer re-executes the candidate pipeline as
@@ -147,8 +149,8 @@ def knn_facts_with_ids(
             rows, schema=cands.schema
         )
         filtered = facts.join(F.broadcast(local), on=id_col, how="semi")
-    if k > n:
-        return filtered
+        if k > len(rows):
+            return filtered
     return knn(filtered, query_vec, k, id_col=id_col, **kw)
 
 

@@ -547,7 +547,7 @@ def decode_wav_stats(media: DataFrame) -> DataFrame:
 # a clear error (use the PIL seam).
 # --------------------------------------------------------------------------
 
-_ZIGZAG = np.array([
+ZIGZAG = np.array([
      0,  1,  8, 16,  9,  2,  3, 10,
     17, 24, 32, 25, 18, 11,  4,  5,
     12, 19, 26, 33, 40, 48, 41, 34,
@@ -559,7 +559,7 @@ _ZIGZAG = np.array([
 ], dtype=np.int64)
 
 # orthonormal 8-point DCT-II basis: A[u, x] = c(u)/2 * cos((2x+1)u*pi/16)
-_DCT_A = np.array([
+DCT_A = np.array([
     [((1 / np.sqrt(2)) if u == 0 else 1.0) / 2.0
      * np.cos((2 * x + 1) * u * np.pi / 16.0) for x in range(8)]
     for u in range(8)
@@ -753,7 +753,7 @@ def _decode_scan(data, pos, frame, scan, qt, huff, restart_interval):
     ]
     br = _BitReader(data, pos)
     pred = [0] * len(comps)
-    A = _DCT_A
+    A = DCT_A
     coef = np.zeros(64, dtype=np.int64)
     n_mcu = 0
     for my in range(mcus_y):
@@ -787,7 +787,7 @@ def _decode_scan(data, pos, frame, scan, qt, huff, restart_interval):
                             coef[k] = _extend(br.receive(s), s)
                             k += 1
                         block = np.zeros(64, dtype=np.float64)
-                        block[_ZIGZAG] = coef * q
+                        block[ZIGZAG] = coef * q
                         spatial = A.T @ block.reshape(8, 8) @ A + 128.0
                         y0 = (my * comp["v"] + by) * 8
                         x0 = (mx * comp["h"] + bx) * 8

@@ -13,8 +13,8 @@ replacement, implemented here once and reused by
    exchange — every output partition holds a contiguous key slice, all
    partitions sort in parallel (Tungsten spillable sort, never one
    task).
-2. ``localCheckpoint`` pins the partitioning: the per-partition counts
-   (job 1) and the final rank stamping (job 2) MUST see identical
+2. an eager ``plan.barrier`` pins the partitioning: the per-partition
+   counts (job 1) and the final rank stamping (job 2) MUST see identical
    partitions — without the pin, AQE's runtime coalescing may replan
    between the two evaluations and corrupt the offsets (the
    `with_dense_ids` double-evaluation hazard).
@@ -38,6 +38,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hippollm_spark import plan
 
 
 def distributed_rank(
@@ -76,7 +78,7 @@ def distributed_rank(
         work = work.repartitionByRange(*sort_cols)
     # Pin the partitioning across the two consuming jobs (counts, then
     # rank stamping) — see module docstring step 2.
-    work = work.localCheckpoint(eager=True)
+    work = plan.barrier(work, eager=True)
     part = work.withColumn("__pid__", F.spark_partition_id())
 
     counts = (
@@ -162,7 +164,7 @@ def distributed_prefix_sum(
         work = work.repartitionByRange(partitions, *sort_cols)
     else:
         work = work.repartitionByRange(*sort_cols)
-    work = work.localCheckpoint(eager=True)
+    work = plan.barrier(work, eager=True)
     part = work.withColumn("__pid__", F.spark_partition_id())
 
     agg_df = part.groupBy("__pid__", *keys).agg(

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hippollm_spark import plan
+
 
 # --------------------------------------------------------------------------
 # Point lookups / guards (P1-P3)
@@ -184,12 +186,12 @@ def with_dense_ids(df: DataFrame, offset: int = 0, id_col: str = "id") -> DataFr
     zip-with-index. Order = current partition order (stable for a just-
     shuffled/written batch; callers needing a semantic order sort first).
 
-    The ``localCheckpoint`` pins one partitioning across the two
+    The eager barrier pins one partitioning across the two
     evaluations (counts job, then id stamping): an upstream shuffle
     under AQE may otherwise runtime-coalesce differently per run and
     the stamped ids would collide or leave gaps.
     """
-    df = df.localCheckpoint(eager=True)
+    df = plan.barrier(df, eager=True)
     part = df.withColumn("__pid__", F.spark_partition_id())
     counts = dict(
         (r["__pid__"], r["cnt"])

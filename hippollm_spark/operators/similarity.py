@@ -27,18 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
 from hippollm_spark.functions import vectors as V
-
-
-def _corpus_spread(df: DataFrame) -> DataFrame:
-    """Stats-gated spread of a vector corpus ahead of a CPU-heavy
-    scoring stage (dedup._cpu_spread): a compact parquet input is one
-    scan split however many rows it holds, which serializes per-row
-    scoring onto one core; big inputs (the 100-TB case) keep their
-    native splits and never pay the exchange."""
-    from hippollm_spark.operators.dedup import _cpu_spread
-
-    return _cpu_spread(df, None)
 
 
 def topk_per_query(
@@ -114,7 +104,7 @@ def topk_per_query(
             F.col(vec_col).cast("array<double>").alias("__v__"),
         )
         if spread:
-            src = _corpus_spread(src)
+            src = plan.spread(src)
         scored = src.mapInPandas(
             _score, f"query_id {qid_type}, vec_id {id_type}, score double"
         )
@@ -124,14 +114,14 @@ def topk_per_query(
         # input is ONE scan split, so without the stats-gated spread
         # the whole scoring chain runs on one core (measured r12:
         # knn_labels' 1.43 s single-task stage was this crossJoin) —
-        # the _cpu_spread discipline, ANN-scoring flavor (guide §2.5).
+        # the plan.spread discipline, ANN-scoring flavor (guide §2.5).
         # ``spread=False`` for single-query callers, where the
         # round-robin exchange of the vectors costs more than the one
         # query's scoring wins back (measured r12: mmr_rerank/bm25_ndcg
         # +0.2-0.3 s with the spread, knn_labels (20 queries) −0.5 s).
         src = vecs.select(id_col, vec_col)
         if spread:
-            src = _corpus_spread(src)
+            src = plan.spread(src)
         paired = src.crossJoin(q)
         if metric == "cosine":
             score = V.cosine_similarity(F.col(vec_col), F.col(query_vec_col))
@@ -441,20 +431,20 @@ def ivf_topk_per_query(
         idx = np.argsort(d, axis=1)[:, :nprobe]
         return pd.Series([[int(j) for j in row] for row in idx])
 
-    q_lists = (
+    # Pin before the driver action: the collect below and the
+    # broadcast join both consume q_lists, and the upstream query
+    # plan is often an expensive (and possibly nondeterministic —
+    # LLM-derived embeddings) model stage. Unpinned, that stage
+    # runs twice AND the literal IN-list could come from a
+    # different execution than the joined rows, silently dropping
+    # a re-derived query's candidates.
+    q_lists = plan.barrier(
         queries.select(
             query_id_col,
             query_vec_col,
             F.explode(_probe(F.col(query_vec_col))).alias("list_id"),
-        )
-        # Pin before the driver action: the collect below and the
-        # broadcast join both consume q_lists, and the upstream query
-        # plan is often an expensive (and possibly nondeterministic —
-        # LLM-derived embeddings) model stage. Unpinned, that stage
-        # runs twice AND the literal IN-list could come from a
-        # different execution than the joined rows, silently dropping
-        # a re-derived query's candidates.
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     # ≤ nlist distinct ints: a bounded driver action that buys literal
     # bucket/partition pruning on the store side.
@@ -1066,9 +1056,7 @@ def kmeans_fit(
     # seal the final assignment (its inputs are cache-resident, so
     # this is one cheap materialization) and release the quantized
     # table pin — no CacheManager entry outlives the call
-    final = _assign(centroids).localCheckpoint(eager=True)
-    q.unpersist()
-    return centroids, final
+    return centroids, plan.seal(_assign(centroids), [q])
 
 
 def _keepers(assigned: DataFrame) -> DataFrame:
@@ -1750,7 +1738,7 @@ def bitext_margin_pairs(
     # interpreted HOF (no codegen), and a single-split source serializes
     # the whole |S|×|T| scoring onto one core (r12 profile: three
     # concurrent 1.5 s single-task stages owned bitext_margin).
-    s = _corpus_spread(
+    s = plan.spread(
         src.select(F.col(id_col).alias("src_id"), F.col(vec_col).alias("__sv__"))
     )
     t = tgt.select(F.col(id_col).alias("tgt_id"), F.col(vec_col).alias("__tv__"))
@@ -1771,9 +1759,7 @@ def bitext_margin_pairs(
     # crossJoin from the leaf (guide §2.4 — don't compute three times).
     # The materialized frame is (ids, score, two ranks) — tiny relative
     # to the scoring work it saves.
-    from hippollm_spark.operators.dedup import plan_barrier
-
-    ranked = plan_barrier(
+    ranked = plan.barrier(
         scores.withColumn("__rs__", F.row_number().over(w_s)).withColumn(
             "__rt__", F.row_number().over(w_t)
         )

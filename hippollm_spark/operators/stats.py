@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
+
 
 def exact_percentiles(
     df: DataFrame,
@@ -44,8 +46,7 @@ def exact_percentiles(
     # repartition on the group keys keeps each group's sort in its own
     # task; row-identical per group (guide §2.5 — bytes-small ≠
     # cpu-small).
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    df = df.repartition(n_shuffle, *by)
+    df = df.repartition(plan.shuffle_partitions(df.sparkSession), *by)
     w = Window.partitionBy(*by).orderBy(F.col(value_col).asc())
     # NULL values are outside the distribution (quantile_cont
     # semantics) — unfiltered they'd sort NULLS FIRST and shift every
@@ -493,26 +494,14 @@ def global_percentile_values(
     filtered = df.filter(F.col(value_col).isNotNull()).select(
         F.col(value_col).alias("__v__")
     )
-    # gate conf: spark.hippollm.percentiles.smallCollectMaxBytes
-    # (estimated bytes of the filtered value column; 0 disables the
-    # fast path — what the two-path parity test uses)
-    try:
-        gate_bytes = int(
-            df.sparkSession.conf.get(
-                "spark.hippollm.percentiles.smallCollectMaxBytes",
-                str(16 * 1024 * 1024),
-            )
-        )
-    except ValueError:
-        gate_bytes = 16 * 1024 * 1024
-    try:
-        est_bytes = int(
-            str(
-                filtered._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        )
-    except Exception:
-        est_bytes = None
+    # gate conf: estimated bytes of the filtered value column; 0
+    # disables the fast path — what the two-path parity test uses
+    gate_bytes = plan.conf_int(
+        df.sparkSession,
+        "spark.hippollm.percentiles.smallCollectMaxBytes",
+        16 * 1024 * 1024,
+    )
+    est_bytes = plan.estimated_bytes(filtered)
     if est_bytes is not None and 0 < gate_bytes and est_bytes <= gate_bytes:
         seq = [r["__v__"] for r in filtered.orderBy("__v__").collect()]
         n = len(seq)
@@ -527,11 +516,7 @@ def global_percentile_values(
             v_hi = seq[min(lo + 1, n) - 1]
             out.append(v_lo + (v_hi - v_lo) * frac)
         return out
-    vals = (
-        filtered
-        .repartitionByRange("__v__")
-        .localCheckpoint(eager=True)
-    )
+    vals = plan.barrier(filtered.repartitionByRange("__v__"), eager=True)
     part = vals.withColumn("__pid__", F.spark_partition_id())
     counts = sorted(
         (
@@ -618,12 +603,12 @@ def threshold_buckets(
     if not by_list:
         # ungrouped: windowless distributed boundaries, assignment is a
         # pure comparison expression — the table never shuffles at all.
-        # ``pin_input`` localCheckpoints df first so an expensive
+        # ``pin_input`` barriers df first so an expensive
         # upstream (e.g. a quality-scoring pass) is computed once for
         # both the boundary job and the assignment output — worth it
         # when upstream >> scan, wasteful for a bare parquet scan.
         if pin_input:
-            df = df.localCheckpoint(eager=True)
+            df = plan.barrier(df, eager=True)
         bvals = global_percentile_values(df, value_col, ps)
         bucket = F.lit(1)
         for bv in bvals:
@@ -904,9 +889,7 @@ def correlation_matrix(
     # profile_columns rationale): the k(k+3)/2 BigDecimal sums ran on
     # the input's 3 scan splits (measured r12: a 1.42 s 3-task stage
     # owned corr_matrix). Exact DECIMAL sums are order-independent.
-    from hippollm_spark.operators.dedup import _cpu_spread
-
-    df = _cpu_spread(df, None)
+    df = plan.spread(df)
     ok = F.lit(True)
     for c in cols:
         ok = ok & F.col(c).isNotNull()

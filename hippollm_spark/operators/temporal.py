@@ -8,9 +8,6 @@ One shuffle on (key), no join at all — this beats the naive
 join+filter+rank (which shuffles both sides AND materializes every
 candidate pair) and stays exact.
 
-A `merge_asof`-style grouped-pandas variant is provided for tolerance
-semantics; the window variant is the scale path.
-
 Range join: bucketize the range key to turn an inequality join into an
 equi-join on bucket + residual filter — the standard Spark shape for
 interval matching.
@@ -20,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from hippollm_spark import plan
 
 
 def asof_join(
@@ -74,41 +73,6 @@ def asof_join(
     for c in right_cols:
         out = out.withColumnRenamed(f"__fill_{c}__", f"{c}{suffix}")
     return out
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "user_id",
-    tolerance=None,
-) -> DataFrame:
-    """merge_asof per key group via cogrouped applyInPandas — for
-    tolerance/nearest semantics the window variant doesn't cover."""
-    import pandas as pd
-
-    out_schema = left.schema.simpleString().strip("struct<>") + "," + ",".join(
-        f"{c}_asof:{f.dataType.simpleString()}"
-        for c, f in zip(right.columns, right.schema.fields)
-        if c not in (on, by)
-    )
-
-    def _merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        l_pdf = l_pdf.sort_values(on)
-        r_pdf = r_pdf.sort_values(on).rename(
-            columns={c: f"{c}_asof" for c in r_pdf.columns if c not in (on, by)}
-        )
-        merged = pd.merge_asof(
-            l_pdf, r_pdf.drop(columns=[by], errors="ignore"), on=on,
-            tolerance=tolerance, direction="backward",
-        )
-        return merged
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(lambda l, r: _merge(l, r), out_schema.replace(":", " "))
-    )
 
 
 def range_join(
@@ -466,7 +430,7 @@ def ewma_latest(
 ORDER_KEY_BIAS = 4_611_686_018_427_387_904
 
 
-def _padded_order_key(ts, id_col: str | None, id_type: str | None):
+def padded_order_key(ts, id_col: str | None, id_type: str | None):
     """Zero-padded, sign-safe "µs-epoch‖id" string key shared by
     `ohlc_bars` and `streaming.ohlc_stream` (and the DuckDB oracle,
     which mirrors the same bias + pad)."""
@@ -525,7 +489,7 @@ def ohlc_bars(
     keys = [] if by is None else ([by] if isinstance(by, str) else list(by))
     b = F.date_trunc(bucket, F.col(ts_col)).alias("bucket")
     # NTZ-safe: session TZ is pinned UTC, so the cast keeps the instant
-    order = _padded_order_key(
+    order = padded_order_key(
         F.col(ts_col), id_col, dict(df.dtypes).get(id_col) if id_col else None
     )
     v = F.col(value_col)
@@ -695,10 +659,9 @@ def autocorrelation(
     # stage owns value_acf). An explicit repartition(N, keys) satisfies
     # the window's required clustering with a non-coalescible exchange,
     # so each key sorts in its own task — same rows per key, identical
-    # results (the _cpu_spread lesson, shuffle-stage flavor; guide
+    # results (the plan.spread lesson, shuffle-stage flavor; guide
     # §2.5: bytes-small is not cpu-small).
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    df = df.repartition(n_shuffle, *keys)
+    df = df.repartition(plan.shuffle_partitions(df.sparkSession), *keys)
     w = Window.partitionBy(*keys).orderBy(order_col, tiebreak_col)
     cur = F.col(value_col).cast("decimal(18,6)")
     cols = [cur.alias("__x__")]

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hippollm_spark.operators.dedup import normalized_text, plan_barrier
+from hippollm_spark import plan
+from hippollm_spark.operators.dedup import normalized_text
 
 # Tiny deterministic stopword lists per language for the n-gram/stopword
 # language-ID heuristic. (Heuristic quality is not the point — the
@@ -96,7 +97,7 @@ def with_tokens(
     boundary because the expression is non-cheap and multiply-used —
     same discipline as dedup.with_shingles).
 
-    ``spread=True`` routes the input through ``dedup._cpu_spread``
+    ``spread=True`` routes the input through ``plan.spread``
     first, for callers whose per-row expression chain downstream of
     the tokenizer is CPU-heavy (n-gram md5 chains, per-row array
     sorts): a compacted single-row-group parquet file is ONE scan
@@ -108,9 +109,7 @@ def with_tokens(
     costs more than the branch work it parallelizes (measured r11 on
     ngram_lm_score: 2.3-3.4 s spread vs 1.0 s share-only)."""
     if spread:
-        from hippollm_spark.operators.dedup import _cpu_spread
-
-        docs = _cpu_spread(docs, None)
+        docs = plan.spread(docs)
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("__text__"),
@@ -202,10 +201,10 @@ def with_quality_language(
     pipeline, and a compacted single-row-group parquet corpus is ONE
     scan split no matter its size — measured r11 as a 1.25 s
     single-task stage (twice, see curate_corpus) at the head of every
-    curation query. The spread is plan-stats-gated (`_cpu_spread`), so
+    curation query. The spread is plan-stats-gated (`plan.spread`), so
     inputs with enough native splits — the 100-TB case — skip the
     exchange entirely. When the spread DOES fire, the output also takes
-    a lazy localCheckpoint as a plan barrier: a caller's filter on the
+    a lazy ``plan.barrier``: a caller's filter on the
     computed columns otherwise gets substituted + pushed below the
     round-robin exchange, re-running the whole chain single-task on the
     scan split (measured r11: a 770 ms 1-task Filter stage). The
@@ -216,9 +215,7 @@ def with_quality_language(
     """
     spread_fired = False
     if spread:
-        from hippollm_spark.operators.dedup import _cpu_spread
-
-        spread_in = _cpu_spread(docs, None)
+        spread_in = plan.spread(docs)
         spread_fired = spread_in is not docs
         docs = spread_in
     t = docs.select(
@@ -254,7 +251,7 @@ def with_quality_language(
         "lang_pred",
     )
     if spread_fired:
-        out = out.transform(plan_barrier)
+        out = out.transform(plan.barrier)
     return out
 
 
@@ -650,7 +647,7 @@ def tfidf_keywords(
     tf = (
         terms.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .transform(plan_barrier)
+        .transform(plan.barrier)
     )
     # corpus size as a scalar subquery: the count runs inside the
     # scoring query instead of as a separate eager docs.count() job per
@@ -704,7 +701,7 @@ def pmi_collocations(
     # scanned+tokenized once per execution, not three times (r11,
     # guide §2.4 — plan inspection showed one parquet scan per branch,
     # zero ReusedExchange).
-    t = with_tokens(docs, id_col=id_col, text_col=text_col).transform(plan_barrier)
+    t = with_tokens(docs, id_col=id_col, text_col=text_col).transform(plan.barrier)
     toks = F.col("__toks__")
     uni = (
         t.select(F.explode(toks).alias("w"))
@@ -874,7 +871,7 @@ def ngram_lm_score(
     # frame so the corpus is scanned+tokenized once per execution —
     # plan inspection r11 showed SIX parquet scans of the corpus and
     # zero ReusedExchange without the boundary (guide §2.4).
-    t = with_tokens(docs, id_col=id_col, text_col=text_col).transform(plan_barrier)
+    t = with_tokens(docs, id_col=id_col, text_col=text_col).transform(plan.barrier)
     toks = F.col("__toks__")
     doc_bigrams = t.select(
         "doc_id",
@@ -890,7 +887,7 @@ def ngram_lm_score(
                 ),
             ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
         ).alias("bg"),
-    ).select("doc_id", "bg.w1", "bg.w2").transform(plan_barrier)
+    ).select("doc_id", "bg.w1", "bg.w2").transform(plan.barrier)
     bg_counts = doc_bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c_xy"))
     uni = (
         t.select(F.explode(toks).alias("w"))
@@ -1098,7 +1095,7 @@ def ppmi_pairs(
             F.posexplode(F.col("__toks__")).alias("pos", "term"),
         )
         .filter(F.col("term") != "")
-        .transform(plan_barrier)
+        .transform(plan.barrier)
     )
     vocab = (
         toks.groupBy("term")
@@ -1107,7 +1104,7 @@ def ppmi_pairs(
         .limit(vocab_size)
         .select("term")
     )
-    vt = toks.join(F.broadcast(vocab), "term").transform(plan_barrier)
+    vt = toks.join(F.broadcast(vocab), "term").transform(plan.barrier)
     offsets = [o for o in range(-window, window + 1) if o != 0]
     ctx = vt.select(
         "doc_id",

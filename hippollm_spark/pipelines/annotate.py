@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
 from hippollm_spark.functions.text import (
     first_sentence,
     parse_bullet_points,
@@ -190,24 +191,6 @@ def reformulate(
 # --------------------------------------------------------------------------
 # Stage 4 — dedup against store + earlier batch facts (C3)
 # --------------------------------------------------------------------------
-
-def _knn_candidates(
-    new_facts: DataFrame, existing: DataFrame, k: int, query_id: str = "__ord__"
-) -> DataFrame:
-    """Top-k existing facts per new fact by embedding distance — the
-    batched form of the reference's per-fact Chroma query (storage.py:266)."""
-    from hippollm_spark.operators.similarity import topk_per_query
-
-    queries = new_facts.select(
-        F.col(query_id).alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return topk_per_query(
-        existing.select(F.col("id").alias("vec_id"), "text", "embedding"),
-        queries,
-        k=k,
-        metric="l2",
-    )
-
 
 def dedup_facts(
     new_facts: DataFrame,
@@ -613,7 +596,7 @@ def annotate_documents(
         from dataclasses import asdict
 
         log.log("annotate_start", cfg=asdict(cfg))
-    ctxs = contextualize(docs, llm, cfg.ctx_size).localCheckpoint(eager=False)
+    ctxs = plan.barrier(contextualize(docs, llm, cfg.ctx_size))
     splitter = get_splitter(cfg.splitter)
     if cfg.splitter == "paragraph":
         chunks = splitter(docs)
@@ -640,18 +623,18 @@ def annotate_documents(
         rank_col="__ord__",
     )
     reformed = reformulate(raw_facts, ctxs, llm, cfg.inference_partitions)
-    gated = dedup_facts(
-        reformed, store, llm, nli, embed, cfg.k_dedup, index=fact_index
-    ).localCheckpoint(eager=False)
+    gated = plan.barrier(
+        dedup_facts(reformed, store, llm, nli, embed, cfg.k_dedup, index=fact_index)
+    )
     # ^ lazy checkpoint, not cache: same materialize-once guarantee for
     #   the multi-consumer frames (LLM stages must not re-run), but the
     #   blocks are GC-managed instead of pinned in CacheManager
     fresh = gated.filter(~F.col("redundant"))
 
     mentions = extract_entities(fresh, llm)
-    resolved = resolve_entities(
-        mentions, store, llm, nli, embed, cfg.k_link, index=entity_index
-    ).localCheckpoint(eager=False)
+    resolved = plan.barrier(
+        resolve_entities(mentions, store, llm, nli, embed, cfg.k_link, index=entity_index)
+    )
 
     new_entities = resolved.filter("is_new").select(
         F.col("resolved").alias("name"), F.lit("").alias("description")
@@ -715,6 +698,6 @@ def annotate_documents_serial(
     for did in ids:
         one = docs.filter(F.col("doc_id") == did)
         annotate_documents(store, one, llm, nli, embed, cfg, log=log)
-        store.entities = store.entities.localCheckpoint(eager=True)
-        store.facts = store.facts.localCheckpoint(eager=True)
+        store.entities = plan.barrier(store.entities, eager=True)
+        store.facts = plan.barrier(store.facts, eager=True)
     return store

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
 from hippollm_spark.operators.dedup import (
     apply_dedup,
     cross_jaccard_pairs,
@@ -140,7 +141,7 @@ def curate_corpus(
     # .cache(), not localCheckpoint: inline pipelined materialization and
     # columnar pruned reads for the two filter consumers. Every pin is
     # function-local and released before return (the graph operators'
-    # _seal discipline) — see the sealed summary at the bottom.
+    # plan.seal discipline) — see the sealed summary at the bottom.
     # NOTE r11: consumers fan out as CONCURRENT broadcast-build jobs
     # that can race an unbuilt cache and compute its partitions more
     # than once (the event log showed the keep/surv subplans executing
@@ -253,10 +254,7 @@ def curate_corpus(
     # clean pins outlive curate_corpus and accumulate across repeated
     # pipeline invocations in one session (the no-leaked-pins
     # discipline of test_iterative_graph_ops_release_cache_pins).
-    out = out.localCheckpoint(eager=True)
-    for p in pins:
-        p.unpersist()
-    return out
+    return plan.seal(out, pins)
 
 
 def build_training_mix(

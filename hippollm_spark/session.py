@@ -57,6 +57,10 @@ _DEFAULTS = {
     # the old threshold, and regressed 3.1 s → 6.5 s as an SMJ until
     # the budget covered it; genuinely huge dims still shuffle).
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
+    # Reap reliable-checkpoint files once their frame is unreferenced
+    # (plan.barrier writes them when a checkpoint dir is set); without
+    # this, repeated library calls leave every checkpoint on disk.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
 

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
+
 
 def load_text(spark: SparkSession, location: str, doc_id: int = 0) -> DataFrame:
     """S4 — one document per file (reference loaders.py:14-18)."""
@@ -265,12 +267,11 @@ def read_docs_jsonl(
     the same job instead of caching.
     """
     full_schema = schema + ", _corrupt_record string"
-    parsed = (
+    parsed = plan.barrier(
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .localCheckpoint(eager=False)
     )
     good = parsed.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record"
@@ -303,14 +304,13 @@ def read_docs_csv(
     malformed line.
     """
     full_schema = schema + ", _corrupt_record string"
-    parsed = (
+    parsed = plan.barrier(
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("header", str(header).lower())
         .option("sep", sep)
         .csv(path)
-        .localCheckpoint(eager=False)
     )
     good = parsed.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record"

@@ -27,6 +27,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
 from hippollm_spark.operators import graph, knn, relational
 from hippollm_spark.schema import ENTITIES_SCHEMA, FACTS_SCHEMA
 
@@ -92,15 +93,15 @@ class HippoStore:
         """Overwrite-safe save: a loaded store's DataFrames lazily read
         from the very files an overwrite deletes (read→overwrite of the
         same location corrupts the write), so materialize first with an
-        eager localCheckpoint. A production deployment would use a
+        eager barrier. A production deployment would use a
         table format (Delta/Iceberg) or versioned directories instead;
         the semantics here are the same."""
         # materialization (same rows, truncated lineage) keeps any
         # built index valid — restore the handles around the setter's
         # blanket invalidation
         ent_idx, fct_idx = self.entity_index, self.fact_index
-        self.entities = self.entities.localCheckpoint(eager=True)
-        self.facts = self.facts.localCheckpoint(eager=True)
+        self.entities = plan.barrier(self.entities, eager=True)
+        self.facts = plan.barrier(self.facts, eager=True)
         self.entity_index, self.fact_index = ent_idx, fct_idx
         self.entities.write.mode("overwrite").parquet(os.path.join(path, "entities.parquet"))
         self.facts.write.mode("overwrite").parquet(os.path.join(path, "facts.parquet"))

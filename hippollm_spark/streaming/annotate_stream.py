@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from hippollm_spark import plan
 from hippollm_spark.pipelines.annotate import AnnotateConfig, annotate_documents
 from hippollm_spark.store import HippoStore
 
@@ -72,8 +73,8 @@ def annotate_stream(
         )
         # Materialize new state so the next epoch's lineage doesn't
         # stack unioned plans epoch over epoch.
-        store.entities = store.entities.localCheckpoint(eager=True)
-        store.facts = store.facts.localCheckpoint(eager=True)
+        store.entities = plan.barrier(store.entities, eager=True)
+        store.facts = plan.barrier(store.facts, eager=True)
         if store_path is not None:
             store.save(store_path)
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hippollm_spark import plan
+
 EVENTS_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -267,7 +269,7 @@ def incremental_rollup(
                 merged = upd  # first batch: table does not exist yet
             # Materialize before writing: the plan reads the same path
             # the write replaces (read-your-own-table overwrite hazard).
-            merged = merged.localCheckpoint(eager=True)
+            merged = plan.barrier(merged, eager=True)
             prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             try:
@@ -305,11 +307,11 @@ def ohlc_stream(
     Accepts a static frame too (parity testing: same plan minus the
     watermark); batch results match `ohlc_bars` exactly.
     """
-    from hippollm_spark.operators.temporal import _padded_order_key
+    from hippollm_spark.operators.temporal import padded_order_key
 
     if events.isStreaming:
         events = events.withWatermark("ts", watermark)
-    order = _padded_order_key(
+    order = padded_order_key(
         F.col("ts"), id_col, dict(events.dtypes).get(id_col) if id_col else None
     )
     v = F.col(value_col)

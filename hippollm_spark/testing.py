@@ -197,12 +197,12 @@ def _jpeg_category(v: int) -> int:
 def _jpeg_encode_block(bw, block, q, dc_map, ac_map, pred):
     import numpy as np
 
-    from hippollm_spark.operators.multimodal import _DCT_A, _ZIGZAG
+    from hippollm_spark.operators.multimodal import DCT_A, ZIGZAG
 
-    F = _DCT_A @ (block - 128.0) @ _DCT_A.T
-    # zigzag-order coefs (zz[k] = F_flat[_ZIGZAG[k]]) quantized by the
+    F = DCT_A @ (block - 128.0) @ DCT_A.T
+    # zigzag-order coefs (zz[k] = F_flat[ZIGZAG[k]]) quantized by the
     # zigzag-ordered table
-    zz = np.round(F.reshape(64)[_ZIGZAG] / q).astype(np.int64)
+    zz = np.round(F.reshape(64)[ZIGZAG] / q).astype(np.int64)
     diff = int(zz[0]) - pred
     t = _jpeg_category(diff)
     code, ln = dc_map[t]
@@ -271,12 +271,12 @@ def encode_baseline_jpeg(
         qids = [0, 1, 1]
     maxh = max(s[0] for s in sampling)
     maxv = max(s[1] for s in sampling)
-    from hippollm_spark.operators.multimodal import _ZIGZAG
+    from hippollm_spark.operators.multimodal import ZIGZAG
 
     # quant tables stored/applied in ZIGZAG order
     qz = [
-        np.array([_JPEG_QL[_ZIGZAG[k]] for k in range(64)], dtype=np.float64),
-        np.array([_JPEG_QC[_ZIGZAG[k]] for k in range(64)], dtype=np.float64),
+        np.array([_JPEG_QL[ZIGZAG[k]] for k in range(64)], dtype=np.float64),
+        np.array([_JPEG_QC[ZIGZAG[k]] for k in range(64)], dtype=np.float64),
     ]
     # pad each plane to its own block grid aligned to the MCU grid
     mcus_x = -(-w // (8 * maxh))
@@ -301,9 +301,9 @@ def encode_baseline_jpeg(
         out.extend((len(payload) + 2).to_bytes(2, "big"))
         out.extend(payload)
 
-    seg(0xDB, bytes([0x00]) + bytes(_JPEG_QL[_ZIGZAG[k]] for k in range(64)))
+    seg(0xDB, bytes([0x00]) + bytes(_JPEG_QL[ZIGZAG[k]] for k in range(64)))
     if not gray:
-        seg(0xDB, bytes([0x01]) + bytes(_JPEG_QC[_ZIGZAG[k]] for k in range(64)))
+        seg(0xDB, bytes([0x01]) + bytes(_JPEG_QC[ZIGZAG[k]] for k in range(64)))
     ncomp = 1 if gray else 3
     sof = bytearray([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([ncomp])
     for ci in range(ncomp):

@@ -371,32 +371,3 @@ def test_simhash_block_pairs_releases_storage(spark):
     # checkpoint blocks are ContextCleaner-reaped once unreferenced;
     # the old .cache() pin would sit here forever
     assert not leaked, f"storage pins leaked by repeated calls: {leaked}"
-
-
-def test_plan_barrier_reliable_when_checkpoint_dir_set(spark, tmp_path):
-    # plan_barrier policy: localCheckpoint by default, RELIABLE
-    # checkpoint (survives executor loss on a cluster) when the app
-    # configured a checkpoint dir.
-    df = spark.range(10).withColumn("v", F.col("id") * 2)
-    local = dedup.plan_barrier(df, eager=True)
-    assert local.count() == 10
-    assert local._jdf.rdd().toDebugString() is not None
-    sc = spark.sparkContext
-    assert not sc._jsc.sc().checkpointDir().isDefined()
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        rel = dedup.plan_barrier(df, eager=True)
-        assert rel.count() == 10
-        assert sorted(r["v"] for r in rel.collect()) == sorted(
-            r["v"] for r in df.collect()
-        )
-        # the reliable path wrote checkpoint files under the configured dir
-        ckpt_files = [p for p in (tmp_path / "ckpt").rglob("*") if p.is_file()]
-        assert ckpt_files, "expected reliable checkpoint files on disk"
-    finally:
-        # restore the local default for the rest of the session (no
-        # public unset API — clear the underlying Option directly)
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-            spark.sparkContext._jvm.scala.Option.apply(None)
-        )
-    assert not sc._jsc.sc().checkpointDir().isDefined()

@@ -221,64 +221,3 @@ def test_iterative_graph_ops_release_cache_pins(spark):
         out = fn()
         assert out.count() > 0
         assert cm.isEmpty(), f"cache pins leaked by {fn}"
-
-
-def test_loop_tuning_restores_confs_on_exception(spark):
-    """The loop-scoped planner settings must be restored whatever
-    happens inside the loop — an exception mid-iteration must not leak
-    AQE-off / narrow shuffle widths into the rest of the session."""
-    import pytest
-
-    from hippollm_spark.operators.graph import _bc, _loop_tuning
-
-    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    sp0 = spark.conf.get("spark.sql.shuffle.partitions")
-    with pytest.raises(RuntimeError):
-        with _loop_tuning(spark, 100):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == sp0
-
-    # ceiling: a huge key volume keeps the session's own sizing
-    with _loop_tuning(spark, 10**9):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == sp0
-
-    # broadcast gate: hint applied at/below the max, withheld above
-    df = spark.range(3).toDF("x")
-    hinted = _bc(df, 1000)
-    unhinted = _bc(df, 10**9)
-    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in unhinted._jdf.queryExecution().analyzed().toString()
-
-
-def test_loop_tuning_is_per_session(spark):
-    """Two sessions looping concurrently must each get tuned and
-    restored independently — the refcount/saved state is keyed by
-    session, not module-global (ADVICE r8: a second session's loop ran
-    untuned and the first session's saved confs were written onto the
-    second on last exit)."""
-    from hippollm_spark.operators.graph import _loop_tuning
-
-    other = spark.newSession()
-    other.conf.set("spark.sql.shuffle.partitions", "17")
-    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    sp0 = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        with _loop_tuning(spark, 100):
-            # second session's loop must tune ITS confs (not be treated
-            # as a nested entry of the first session's loop)...
-            with _loop_tuning(other, 100):
-                assert other.conf.get("spark.sql.adaptive.enabled") == "false"
-                assert other.conf.get("spark.sql.shuffle.partitions") == "8"
-                assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-            # ...and restore ITS saved values, leaving the first
-            # session's loop still tuned
-            assert other.conf.get("spark.sql.shuffle.partitions") == "17"
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
-        assert spark.conf.get("spark.sql.shuffle.partitions") == sp0
-    finally:
-        other.conf.unset("spark.sql.shuffle.partitions")

@@ -90,6 +90,37 @@ def test_intersection_knn(store_tables):
     assert {r["id"] for r in res.collect()} == {0}
 
 
+def test_filtered_knn_overflow_branch_matches_collect_path(spark):
+    """Past ``max(collect_max, k)`` candidates the ids stay a broadcast
+    semi-join instead of a collected local relation; both paths must
+    return the same ranked rows, and a small candidate set still takes
+    the unranked short circuit."""
+    from hippollm_spark.schema import FACTS_SCHEMA
+
+    texts = [f"fact {i}" for i in range(12)]
+    facts = spark.createDataFrame(
+        [
+            (i, t, [], [], 1.0, [float(x) for x in hash_embedding(t, DIM)])
+            for i, t in enumerate(texts)
+        ],
+        FACTS_SCHEMA,
+    )
+    q = hash_embedding("fact 3", DIM)
+    cands = spark.createDataFrame([(i,) for i in range(10)], "fact_id long")
+
+    def ranked(collect_max):
+        out = knn.knn_facts_with_ids(facts, q, cands, k=3, collect_max=collect_max)
+        return [(r["id"], r["distance"]) for r in out.collect()]
+
+    collected = ranked(100_000)
+    assert len(collected) == 3 and collected[0][0] == 3
+    assert ranked(2) == collected  # 10 candidates overflow a cap of 3
+    few = spark.createDataFrame([(0,), (1,)], "fact_id long")
+    short = knn.knn_facts_with_ids(facts, q, few, k=3, collect_max=1)
+    assert "distance" not in short.columns
+    assert {r["id"] for r in short.collect()} == {0, 1}
+
+
 def test_upsert_guard_and_add_entities(store_tables, spark):
     ents = store_tables["entities"]
     new = spark.createDataFrame(
