@@ -239,7 +239,7 @@ def _dec(col):
     identical DECIMAL(38,10), so SUM is exact and engine-order-proof.
 
     SLOW PATH — Spark sums DECIMAL(38,10) through BigDecimal (~6.4x a
-    long sum at sf10, tools/decsum_probe.py). The money-sum family now
+    long sum at sf10). The money-sum family now
     uses ``_e6`` / ``_e6sum`` below; ``_dec`` remains for the few
     non-hot-path disciplines that want a decimal-typed value."""
     return col.cast("decimal(38,10)")
@@ -252,9 +252,8 @@ def _e6(col):
     engine-identical and integer sums/compares on it are exact and
     order-independent. Replaces the DECIMAL(38,10) cast on the
     scan-aggregate hot path: Spark's BigDecimal-backed decimal sum was
-    4.15 s vs 0.65 s for the long sum at sf10 (tools/decsum_probe.py;
-    DuckDB twin 0.50 s). Oracle twin: ``CAST(floor(x * 1000000.0 +
-    0.5) AS BIGINT)``.
+    4.15 s vs 0.65 s for the long sum at sf10 (DuckDB twin 0.50 s).
+    Oracle twin: ``CAST(floor(x * 1000000.0 + 0.5) AS BIGINT)``.
 
     Use the raw long sum ONLY where the per-group row count is
     structurally bounded (per-order, per-part, per-supplier groups —
@@ -274,7 +273,7 @@ def _e6sum(col, cond=None, units=False):
     which DuckDB widens to HUGEINT (128-bit, exact) natively, and the
     recombination is the algebraic identity sum(e) = sum(hi)*2^20 +
     sum(lo). Cost at sf10: 0.67 s vs 0.63 s for the raw (overflowable)
-    long sum (tools/decsum_probe.py).
+    long sum.
 
     ``cond`` wraps both partial sums in the same WHEN (for conditional
     sums; NULL when no row matches, like sum(when(...)));
@@ -283,9 +282,8 @@ def _e6sum(col, cond=None, units=False):
     lo is ``e & 0xFFFFF`` (two's-complement AND = e mod 2^20 in
     [0, 2^20), identical to ``e - (e >> 20) * 2^20`` incl. negatives)
     rather than the subtract form: the shallower expression tree keeps
-    the agg at the plain-long-sum floor (0.67 s vs 0.85 s at sf10,
-    tools/decsum_probe.py) — the subtract re-evaluated the whole
-    floor chain through ``hi``."""
+    the agg at the plain-long-sum floor (0.67 s vs 0.85 s at sf10) —
+    the subtract re-evaluated the whole floor chain through ``hi``."""
     e = col if units else _e6(col)
     hi = F.shiftright(e, 20)
     lo = e.bitwiseAND(F.lit(1048575))

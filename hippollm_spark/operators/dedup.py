@@ -858,7 +858,6 @@ def dedup_canonicalize(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Collapse a near-duplicate pair graph into per-document keep/drop
     decisions: every document that appears in at least one pair is
@@ -950,40 +949,35 @@ def dedup_canonicalize(
         .transform(lambda d: plan.barrier(d, eager=True))
     )
     n_e = edges.count()  # cheap on the checkpoint; gates the label broadcast
-    pin = labels = (
+    labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
     ).cache()
-    with plan.loop_tuning(pairs.sparkSession, n_e):
-        for it in range(max_iter):
-            nbr_min = (
-                edges.join(
-                    plan.broadcast_if(labels.withColumnRenamed("doc_id", "dst"), n_e),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.min("label").alias("nbr_label"))
-                .withColumnRenamed("src", "doc_id")
+
+    def step(merged: DataFrame) -> DataFrame:
+        labels = merged.drop("__chg__")  # the previous round's change flag
+        nbr_min = (
+            edges.join(
+                plan.broadcast_if(labels.withColumnRenamed("doc_id", "dst"), n_e),
+                "dst",
             )
-            merged_cache = merged = (
-                labels.join(plan.broadcast_if(nbr_min, n_e), "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                    ).alias("label"),
-                    (F.col("nbr_label") < F.col("label")).alias("__chg__"),
-                )
-            ).cache()
-            if it % checkpoint_every == checkpoint_every - 1:
-                merged = plan.barrier(merged, eager=True)
-            changed = merged.filter(F.col("__chg__")).limit(1).count()
-            pin.unpersist()  # previous round's label table, now superseded
-            pin = merged_cache
-            labels = merged.drop("__chg__")
-            if changed == 0:
-                break
+            .groupBy("src")
+            .agg(F.min("label").alias("nbr_label"))
+            .withColumnRenamed("src", "doc_id")
+        )
+        return labels.join(plan.broadcast_if(nbr_min, n_e), "doc_id", "left").select(
+            "doc_id",
+            F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias("label"),
+            (F.col("nbr_label") < F.col("label")).alias("__chg__"),
+        )
+
+    def converged(prev: DataFrame, cur: DataFrame) -> bool:
+        return cur.filter(F.col("__chg__")).limit(1).count() == 0
+
+    merged, pins = plan.iterate(
+        labels, step, max_iter, every=3, n_keys=n_e, converged=converged
+    )
     # Cut lineage at the operator boundary: the loop leaves a plan that
     # nests one join+agg per round, and downstream consumers (anti-join
     # → cross-corpus join → window) would pay Catalyst analysis over
@@ -991,8 +985,8 @@ def dedup_canonicalize(
     # planning in the curation pipeline at toy data sizes. The loop's
     # convergence counts already materialized every row, so this
     # checkpoint costs one tiny job and makes the result a leaf.
-    out = labels.withColumnRenamed("label", "canonical_id")
-    return plan.seal(out, [pin])
+    out = merged.drop("__chg__").withColumnRenamed("label", "canonical_id")
+    return plan.seal(out, pins)
 
 
 def apply_dedup(

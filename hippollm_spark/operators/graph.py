@@ -128,8 +128,6 @@ def explore(
     max_depth: int = 2,
     max_relations: int | None = 15,
     *,
-    cap_all_depths: bool = False,
-    checkpoint_after: int = 2,
     persist_edges: bool = False,
 ) -> DataFrame:
     """G2 — multi-hop neighbourhood expansion (reference
@@ -139,8 +137,7 @@ def explore(
     - per-node cap keeps the ``max_relations`` neighbours with the MOST
       shared facts (app.py:47-50),
     - the cap is only applied at depth 1 — recursive calls omit
-      ``max_relations`` (app.py:55-62). ``cap_all_depths=True`` gives
-      the saner scalable behavior.
+      ``max_relations`` (app.py:55-62).
     - visited-set dedup: a node expanded at depth d is not re-expanded.
 
     Implementation: iterative BFS, one frontier join per hop (k hops =
@@ -180,7 +177,7 @@ def explore(
             )
             .withColumn("depth", F.lit(depth))
         )
-        if max_relations is not None and (depth == 1 or cap_all_depths):
+        if max_relations is not None and depth == 1:
             w = Window.partitionBy("src").orderBy(
                 F.desc("n_facts"), F.asc("dst")
             )
@@ -191,8 +188,8 @@ def explore(
             )
         # Hop outputs are reused three times (early-exit probe, result
         # union, next frontier): cache() gives the reuse without the
-        # eager extra job of a barrier. Past ``checkpoint_after``
-        # hops, ALSO cut lineage — plans grow multiplicatively with
+        # eager extra job of a barrier. From the second hop on, ALSO
+        # cut lineage — plans grow multiplicatively with
         # depth and deep traversals re-plan forever otherwise. The FINAL
         # hop is consumed exactly once (the result union; the loop
         # breaks before building another frontier), so materializing it
@@ -201,7 +198,7 @@ def explore(
         if depth < max_depth:
             links = links.cache()
             pins.append(links)
-            if depth >= checkpoint_after:
+            if depth >= 2:
                 links = plan.barrier(links, eager=True)
         results = links if results is None else results.unionByName(links)
         if depth == max_depth:
@@ -237,9 +234,7 @@ def explore(
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, *, checkpoint_every: int = 3
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components of the entity graph (entities linked when
     they share a fact) via hash-min label propagation over the
     BIPARTITE entity-fact incidence — each iteration pushes the minimum
@@ -275,7 +270,6 @@ def connected_components(
         .distinct()
         .withColumn("label", F.xxhash64("entity"))
     ).cache()
-    pin = labels  # the one live per-round pin; superseded pins unpersist
     # Per-round invariant (r11): every entity belongs to at least one
     # fact (labels derives from edges), and each fact's min includes
     # the entity's OWN label, so new_label <= label for every entity —
@@ -287,34 +281,31 @@ def connected_components(
     # 2^63 << 10^38). Labels are per-entity non-increasing, so the sum
     # is equal across a round IFF no label changed.
     label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum = labels.agg(label_sum).first()["s"]  # also builds the pin
-    with plan.loop_tuning(edges.sparkSession, n_inc):
-        for it in range(max_iter):
-            fact_min = (
-                edges.join(plan.broadcast_if(labels, n_inc), "entity")
-                .groupBy("fact_id")
-                .agg(F.min("label").alias("fact_label"))
-            )
-            new_cache = new_labels = (
-                edges.join(plan.broadcast_if(fact_min, n_inc), "fact_id")
-                .groupBy("entity")
-                .agg(F.min("fact_label").alias("label"))
-            ).cache()
-            if it % checkpoint_every == checkpoint_every - 1:
-                new_labels = plan.barrier(new_labels, eager=True)
-            cur_sum = new_labels.agg(label_sum).first()["s"]
-            pin.unpersist()  # previous round's label table, now superseded
-            pin = new_cache
-            labels = new_labels
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-    return plan.seal(labels.withColumnRenamed("label", "component"), [edges, pin])
+    sums = [labels.agg(label_sum).first()["s"]]  # also builds the pin
+
+    def step(labels: DataFrame) -> DataFrame:
+        fact_min = (
+            edges.join(plan.broadcast_if(labels, n_inc), "entity")
+            .groupBy("fact_id")
+            .agg(F.min("label").alias("fact_label"))
+        )
+        return (
+            edges.join(plan.broadcast_if(fact_min, n_inc), "fact_id")
+            .groupBy("entity")
+            .agg(F.min("fact_label").alias("label"))
+        )
+
+    def converged(prev: DataFrame, cur: DataFrame) -> bool:
+        sums.append(cur.agg(label_sum).first()["s"])
+        return sums[-1] == sums[-2]
+
+    labels, pins = plan.iterate(
+        labels, step, max_iter, every=3, n_keys=n_inc, converged=converged
+    )
+    return plan.seal(labels.withColumnRenamed("label", "component"), [edges, *pins])
 
 
-def connected_components_star(
-    edges: DataFrame, max_rounds: int = 40, *, checkpoint_every: int = 2
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     """Connected components by large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014) — the O(log² n)-worst-case-rounds alternative to
@@ -399,30 +390,19 @@ def connected_components_star(
             .distinct()
         )
 
-    pin = None  # live per-round cache pin (checkpoint rounds need none)
-    n_prev = n0  # carry the round's edge count: e.count() re-ran a job
-    # per round on the previous round's frame whose count was already
-    # known (r11; result-identical, one fewer action per round)
-    with plan.loop_tuning(edges.sparkSession, n0):
-        for r in range(max_rounds):
-            nxt = _small_star(_large_star(e))
-            nxt_pin = None
-            if r % checkpoint_every == checkpoint_every - 1:
-                nxt = plan.barrier(nxt, eager=True)
-            else:
-                nxt_pin = nxt = nxt.cache()
-            # exact set-fixpoint check: counts equal and no new rows
-            done = False
-            n_nxt = nxt.count()
-            if n_nxt == n_prev:
-                done = nxt.join(e, ["u", "v"], "left_anti").isEmpty()
-            n_prev = n_nxt
-            if pin is not None:
-                pin.unpersist()  # previous round's edge set, now superseded
-            pin = nxt_pin
-            e = nxt
-            if done:
-                break
+    # carry each round's edge count: recounting the previous round's
+    # frame would re-run a job whose answer is already known (r11)
+    counts = [n0]
+
+    def converged(prev: DataFrame, cur: DataFrame) -> bool:
+        # exact set-fixpoint check: counts equal and no new rows
+        counts.append(cur.count())
+        return counts[-1] == counts[-2] and cur.join(prev, ["u", "v"], "left_anti").isEmpty()
+
+    e, pins = plan.iterate(
+        e, lambda ed: _small_star(_large_star(ed)), max_rounds,
+        every=2, n_keys=n0, converged=converged,
+    )
     # star edges point child -> component-min entity id; roots (and
     # isolated entities) map to themselves — the root is the label.
     # The groupBy-min guards the capped exit: if max_rounds ran out
@@ -435,7 +415,7 @@ def connected_components_star(
         ents.join(e, ents.eid == e.u, "left")
         .groupBy("entity")
         .agg(F.min(F.coalesce("v", "eid")).alias("component")),
-        [ents] + ([pin] if pin is not None else []),
+        [ents, *pins],
     )
 
 
@@ -487,7 +467,6 @@ def pagerank(
     scale: int = 10**12,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 3,
     seeds: Sequence[str] | None = None,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -519,9 +498,9 @@ def pagerank(
     Shape per iteration: one join ranks⨝edges (both sides keyed on
     the vertex domain — consecutive iterations reuse the hash
     partitioning) and one aggregation shuffle on dst. Lineage is cut
-    with a barrier every ``checkpoint_every`` iterations, the
-    standard iterative-DataFrame discipline (an unbounded plan tree
-    re-optimizes and re-executes from the scan each pass).
+    with a barrier every 3 iterations, the standard iterative-DataFrame
+    discipline (an unbounded plan tree re-optimizes and re-executes
+    from the scan each pass).
 
     Overflow: Σ contributions into one vertex ≤ total mass ≈ scale,
     so damping_pct·Σ ≤ 8.5e13 ≪ 2^63 regardless of graph size.
@@ -585,28 +564,28 @@ def pagerank(
     deg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
     pre = e.join(deg, "src").cache()  # (src, dst, w, outdeg): loop-invariant
     ranks = verts.select("vertex", F.col("_r0").alias("rank_scaled"))
-    # rank/contrib frames are checkpoint leaves with no size stats —
-    # broadcast them (count-gated) so the cached edge list is never
-    # exchanged per round; AQE/partition tuning per plan.loop_tuning
-    with plan.loop_tuning(edges.sparkSession, n):
-        for it in range(iterations):
-            contrib = (
-                pre.join(plan.broadcast_if(ranks, n), pre.src == ranks.vertex)
-                .select("dst", F.expr("(rank_scaled * w) div outdeg").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("s"))
-            )
-            ranks = verts.join(
-                plan.broadcast_if(contrib, n), verts.vertex == contrib.dst, "left"
-            ).select(
-                "vertex",
-                (
-                    F.col("_base")
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("rank_scaled"),
-            )
-            if it % checkpoint_every == checkpoint_every - 1:
-                ranks = plan.barrier(ranks, eager=True)
+
+    def step(ranks: DataFrame) -> DataFrame:
+        # rank/contrib frames are checkpoint leaves with no size stats —
+        # broadcast them (count-gated) so the cached edge list is never
+        # exchanged per round
+        contrib = (
+            pre.join(plan.broadcast_if(ranks, n), pre.src == ranks.vertex)
+            .select("dst", F.expr("(rank_scaled * w) div outdeg").alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("s"))
+        )
+        return verts.join(
+            plan.broadcast_if(contrib, n), verts.vertex == contrib.dst, "left"
+        ).select(
+            "vertex",
+            (
+                F.col("_base")
+                + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+            ).cast("long").alias("rank_scaled"),
+        )
+
+    ranks, _ = plan.iterate(ranks, step, iterations, every=3, n_keys=n)
     return plan.seal(ranks, [e, vert_ids, verts, pre])
 
 
@@ -814,7 +793,6 @@ def shortest_paths(
     *,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Unweighted shortest-path distance from a seed SET (multi-source
     BFS) — the batch form of the reference's depth-limited explore
@@ -826,9 +804,9 @@ def shortest_paths(
     at distance d) to the edge list, anti-join out already-settled
     vertices, settle the remainder at d+1. Each round is one hash join
     + one anti-join on narrow (vertex) keys; the frontier is cached
-    and the settled set barriered every ``checkpoint_every``
-    rounds to cut lineage. Early exit when a frontier lands empty (the
-    count is already materialized by the cache — no extra job).
+    and the settled set barriered every 3 rounds to cut lineage. Early
+    exit when a frontier lands empty (the count is already
+    materialized by the cache — no extra job).
 
     Pass both edge directions for an undirected graph. Output:
     (vertex, dist INT) for reachable vertices only; unreachable
@@ -865,7 +843,7 @@ def shortest_paths(
             settled = settled.unionByName(
                 nxt.withColumn("dist", F.lit(d).cast("int"))
             )
-            if d % checkpoint_every == 0:
+            if d % 3 == 0:
                 settled = plan.barrier(settled, eager=True)
             frontier.unpersist()
             frontier = nxt
@@ -946,7 +924,6 @@ def label_propagation(
     *,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Synchronous label-propagation community detection with a fully
     deterministic update rule: each round, a vertex adopts the label
@@ -971,7 +948,7 @@ def label_propagation(
     # connected_components (joined every round)
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).cache()
     n_e = e.count()  # materializes the pin; sizes the loop shuffles
-    init = labels = (
+    init = (
         e.select(F.explode(F.array("src", "dst")).alias("vertex"))
         .distinct()
         .withColumn("label", F.col("vertex"))
@@ -982,27 +959,24 @@ def label_propagation(
     # threshold; an exact labels.count() would buy a tighter gate at
     # the cost of an extra job per call)
     n_v = 2 * n_e
-    with plan.loop_tuning(edges.sparkSession, n_e):
-        for it in range(iterations):
-            counted = (
-                e.join(plan.broadcast_if(labels, n_v), e.src == labels.vertex)
-                .groupBy("dst", "label")
-                .agg(F.count("*").alias("cnt"))
-            )
-            wmax = Window.partitionBy("dst")
-            pick = (
-                counted.withColumn("__mx__", F.max("cnt").over(wmax))
-                .filter(F.col("cnt") == F.col("__mx__"))
-                .groupBy("dst")
-                .agg(F.min("label").alias("new_label"))
-            )
-            labels = labels.join(
-                plan.broadcast_if(pick, n_v), labels.vertex == pick.dst, "left"
-            ).select(
-                "vertex", F.coalesce("new_label", "label").alias("label")
-            )
-            if it % checkpoint_every == checkpoint_every - 1:
-                labels = plan.barrier(labels, eager=True)
+
+    def step(labels: DataFrame) -> DataFrame:
+        counted = (
+            e.join(plan.broadcast_if(labels, n_v), e.src == labels.vertex)
+            .groupBy("dst", "label")
+            .agg(F.count("*").alias("cnt"))
+        )
+        pick = (
+            counted.withColumn("__mx__", F.max("cnt").over(Window.partitionBy("dst")))
+            .filter(F.col("cnt") == F.col("__mx__"))
+            .groupBy("dst")
+            .agg(F.min("label").alias("new_label"))
+        )
+        return labels.join(
+            plan.broadcast_if(pick, n_v), labels.vertex == pick.dst, "left"
+        ).select("vertex", F.coalesce("new_label", "label").alias("label"))
+
+    labels, _ = plan.iterate(init, step, iterations, every=3, n_keys=n_e)
     return plan.seal(labels, [e, init])
 
 
@@ -1014,7 +988,6 @@ def bellman_ford(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Weighted shortest-path distances from a seed set: ``rounds``
     synchronous Bellman-Ford relaxations with exact BIGINT weights —
@@ -1049,33 +1022,33 @@ def bellman_ford(
     # counting dist per round would cost an extra job, and 2·n_e is a
     # valid (conservative) ceiling for the shipped frame
     n_d = 2 * n_e
-    with plan.loop_tuning(spark, n_e):
-        for r in range(rounds):
-            relaxed = (
-                e.join(plan.broadcast_if(dist, n_d), e.src == dist.vertex)
-                .select(F.col("dst").alias("vertex"), (F.col("dist") + F.col("w")).alias("d"))
-                .groupBy("vertex")
-                .agg(F.min("d").alias("d"))
-            )
-            # least() skips NULLs, so a full-outer join + least IS the
-            # relax (no broadcast hint: full-outer preserves both sides,
-            # so it cannot be a broadcast join)
-            # NOTE r11: fusing the merge into the aggregation
-            # (dist ∪ relax-candidates → groupBy(vertex).min — one
-            # shuffle join fewer per round, same semantics: min() skips
-            # absent rows exactly as least() skips NULLs) was
-            # implemented and MEASURED: graph_sssp 2.2-2.5 s → 2.8 s in
-            # 2 of 3 interleaved pairs, control flat — the union drags
-            # the (tiny, broadcast-sized) dist frame through every
-            # round's full-width exchange, while the full-outer join
-            # against the already-aggregated relax table exchanges it
-            # once at trivial size. REJECTED (guide §1: measure, don't
-            # assume).
-            dist = dist.join(relaxed, "vertex", "full_outer").select(
-                "vertex", F.least("dist", "d").alias("dist")
-            )
-            if r % checkpoint_every == checkpoint_every - 1:
-                dist = plan.barrier(dist, eager=True)
+
+    def step(dist: DataFrame) -> DataFrame:
+        relaxed = (
+            e.join(plan.broadcast_if(dist, n_d), e.src == dist.vertex)
+            .select(F.col("dst").alias("vertex"), (F.col("dist") + F.col("w")).alias("d"))
+            .groupBy("vertex")
+            .agg(F.min("d").alias("d"))
+        )
+        # least() skips NULLs, so a full-outer join + least IS the
+        # relax (no broadcast hint: full-outer preserves both sides,
+        # so it cannot be a broadcast join)
+        # NOTE r11: fusing the merge into the aggregation
+        # (dist ∪ relax-candidates → groupBy(vertex).min — one
+        # shuffle join fewer per round, same semantics: min() skips
+        # absent rows exactly as least() skips NULLs) was
+        # implemented and MEASURED: graph_sssp 2.2-2.5 s → 2.8 s in
+        # 2 of 3 interleaved pairs, control flat — the union drags
+        # the (tiny, broadcast-sized) dist frame through every
+        # round's full-width exchange, while the full-outer join
+        # against the already-aggregated relax table exchanges it
+        # once at trivial size. REJECTED (guide §1: measure, don't
+        # assume).
+        return dist.join(relaxed, "vertex", "full_outer").select(
+            "vertex", F.least("dist", "d").alias("dist")
+        )
+
+    dist, _ = plan.iterate(dist, step, rounds, every=3, n_keys=n_e)
     return plan.seal(dist, [e])
 
 
@@ -1086,7 +1059,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 6,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """k-core decomposition membership by iterative peeling: repeatedly
     delete vertices with degree < k (and their incident edges) until
@@ -1105,36 +1077,33 @@ def k_core(
     every few rounds cuts the nested plan (the `dedup_canonicalize`
     discipline). Output: (vertex, degree) for the surviving k-core.
     """
-    # round 0 reads the edge list 3x (degree count, semi-join filter,
-    # the fixpoint count) — pin it so an expensive upstream plan
-    # computes once; later rounds operate on the cached pruned set
-    pin = e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
+    # round 0 reads the edge list twice (degree count, semi-join
+    # filter) — pin it so an expensive upstream plan computes once;
+    # later rounds operate on the cached pruned set
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).cache()
     n0 = e.count()  # materializes the pin; gates the keep-set broadcasts
-    with plan.loop_tuning(edges.sparkSession, n0):
-        for r in range(rounds):
-            deg = e.groupBy("src").agg(F.count("*").alias("degree"))
-            keep = deg.filter(F.col("degree") >= k).select("src")
-            pruned = e.join(plan.broadcast_if(keep, n0), "src", "left_semi").join(
-                plan.broadcast_if(keep.withColumnRenamed("src", "dst"), n0), "dst", "left_semi"
-            )
-            pruned_pin = None
-            if r % checkpoint_every == checkpoint_every - 1:
-                pruned = plan.barrier(pruned, eager=True)
-            else:
-                pruned_pin = pruned = pruned.cache()
-            done = pruned.count() == e.count()
-            if pin is not None:
-                pin.unpersist()  # previous round's edge set, now superseded
-            pin = pruned_pin
-            e = pruned
-            if done:
-                break
+    # each round's edge count is carried to the next fixpoint check, so
+    # the previous round is never recounted
+    counts = [n0]
+
+    def step(ed: DataFrame) -> DataFrame:
+        deg = ed.groupBy("src").agg(F.count("*").alias("degree"))
+        keep = deg.filter(F.col("degree") >= k).select("src")
+        return ed.join(plan.broadcast_if(keep, n0), "src", "left_semi").join(
+            plan.broadcast_if(keep.withColumnRenamed("src", "dst"), n0), "dst", "left_semi"
+        )
+
+    def converged(prev: DataFrame, cur: DataFrame) -> bool:
+        counts.append(cur.count())
+        return counts[-1] == counts[-2]
+
+    e, pins = plan.iterate(e, step, rounds, every=3, n_keys=n0, converged=converged)
     return plan.seal(
         e.groupBy("src")
         .agg(F.count("*").alias("degree"))
         .filter(F.col("degree") >= k)
         .select(F.col("src").alias("vertex"), "degree"),
-        [pin] if pin is not None else [],
+        pins,
     )
 
 
@@ -1303,7 +1272,6 @@ def random_walks(
     src_col: str = "src",
     dst_col: str = "dst",
     salt: str = "walk",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Deterministic uniform random walks (the node2vec/DeepWalk
     corpus generator): ``walks_per_vertex`` walks of ``walk_length``
@@ -1396,7 +1364,7 @@ def random_walks(
                 "walk_id", "__w__", F.col("n").alias("vertex")
             )
         )
-        if t % checkpoint_every == checkpoint_every - 1 or t == walk_length:
+        if t % 3 == 2 or t == walk_length:
             nxt = plan.barrier(nxt, eager=True)
         else:
             nxt = nxt.cache()

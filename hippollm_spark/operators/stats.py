@@ -482,7 +482,7 @@ def global_percentile_values(
     boundary and fetch those ≤2·len(percentiles) rows. Three jobs on a
     single column — no join, no full-table row_number output.
 
-    Small inputs (optimizer-stats-gated, r12) take a ONE-job fast path:
+    Small inputs (stats-gated, r12; row-capped) take a ONE-job fast path:
     Spark sorts the value column and the driver interpolates the same
     marks with the identical v_lo + (v_hi − v_lo)·frac arithmetic —
     rank lo maps to sorted[lo-1], bit-identical to the distributed
@@ -503,19 +503,16 @@ def global_percentile_values(
     )
     est_bytes = plan.estimated_bytes(filtered)
     if est_bytes is not None and 0 < gate_bytes and est_bytes <= gate_bytes:
-        seq = [r["__v__"] for r in filtered.orderBy("__v__").collect()]
-        n = len(seq)
-        if n == 0:
+        # Without CBO the estimate comes from compressed file sizes (a
+        # dictionary-encoded column holds far more rows than its bytes
+        # suggest), so the rows pulled are capped at the gate's worth of
+        # 8-byte values too; an overflow takes the distributed path.
+        cap = gate_bytes // 8
+        seq = [r["__v__"] for r in filtered.orderBy("__v__").limit(cap + 1).collect()]
+        if not seq:
             return [None for _ in percentiles]
-        out = []
-        for p in percentiles:
-            r = 1 + (n - 1) * float(p)
-            lo = int(r // 1)
-            frac = r - float(lo)
-            v_lo = seq[lo - 1]
-            v_hi = seq[min(lo + 1, n) - 1]
-            out.append(v_lo + (v_hi - v_lo) * frac)
-        return out
+        if len(seq) <= cap:
+            return _interpolate(_rank_marks(len(seq), percentiles), lambda k: seq[k - 1])
     vals = plan.barrier(filtered.repartitionByRange("__v__"), eager=True)
     part = vals.withColumn("__pid__", F.spark_partition_id())
     counts = sorted(
@@ -534,14 +531,8 @@ def global_percentile_values(
     for pid, c in counts:
         offsets[pid] = acc
         acc += c
-    marks = []
-    targets: set[int] = set()
-    for p in percentiles:
-        r = 1 + (n - 1) * float(p)
-        lo = int(r // 1)
-        frac = r - float(lo)
-        marks.append((lo, frac))
-        targets.update((lo, min(lo + 1, n)))
+    marks = _rank_marks(n, percentiles)
+    targets = {t for lo, hi, _ in marks for t in (lo, hi)}
     # map each global target rank to (partition, local rank)
     needed: dict[int, set[int]] = {}
     bounds = [(pid, offsets[pid], offsets[pid] + c) for pid, c in counts]
@@ -564,12 +555,22 @@ def global_percentile_values(
     by_global = {
         offsets[row["__pid__"]] + row["__rn__"]: row["__v__"] for row in rows
     }
-    out = []
-    for lo, frac in marks:
-        v_lo = by_global[lo]
-        v_hi = by_global.get(lo + 1, v_lo)
-        out.append(v_lo + (v_hi - v_lo) * frac)
-    return out
+    return _interpolate(marks, by_global.__getitem__)
+
+
+def _rank_marks(n: int, percentiles: Sequence[float]) -> list[tuple[int, int, float]]:
+    """quantile_cont's 1-based (lo, hi, frac) per percentile over n values."""
+    marks = []
+    for p in percentiles:
+        r = 1 + (n - 1) * float(p)
+        lo = int(r // 1)
+        marks.append((lo, min(lo + 1, n), r - float(lo)))
+    return marks
+
+
+def _interpolate(marks, value_at) -> list:
+    """v_lo + (v_hi − v_lo)·frac per mark; ``value_at`` maps a rank to its value."""
+    return [value_at(lo) + (value_at(hi) - value_at(lo)) * frac for lo, hi, frac in marks]
 
 
 def threshold_buckets(

@@ -9,6 +9,8 @@ has no counterpart there, so every such decision lives here once:
 - ``estimated_bytes`` — the optimizer's size estimate of a plan;
 - ``loop_tuning`` / ``broadcast_if`` — planner settings for iterative
   loops with a known shape;
+- ``iterate``       — the round driver of every state-replacing loop:
+  barrier cadence, cache pins, convergence and early exit;
 - ``conf_int`` / ``shuffle_partitions`` — integer conf reads, one rule:
   unset means the default, a non-integer raises naming the key.
 
@@ -25,7 +27,7 @@ The ``spark.hippollm.*`` keys the operators read (all integers):
 from __future__ import annotations
 
 import threading
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
@@ -221,3 +223,33 @@ def loop_tuning(spark, n_keys: int):
                 spark.conf.set("spark.sql.adaptive.enabled", saved[0])
                 spark.conf.set("spark.sql.shuffle.partitions", saved[1])
                 del _TUNING_STATE[key]
+
+
+def iterate(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], rounds: int, *,
+    every: int, n_keys: int, converged: Callable | None = None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Run ``state = step(state)`` at most ``rounds`` times under
+    ``loop_tuning``; return the final state and its live cache pins,
+    ready for ``seal``. Every ``every``-th round ends in an eager
+    ``barrier``. Without ``converged`` the other rounds stay lazy and
+    nothing is pinned. With it they are cached, so the check and the
+    next round share one materialization: ``converged(prev, cur)`` runs
+    while ``prev`` is still pinned, the loop stops at the first True,
+    and each superseded pin (``state``'s own too) is released."""
+    pin = state if converged is not None and state.is_cached else None
+    with loop_tuning(state.sparkSession, n_keys):
+        for r in range(rounds):
+            cur = step(state)
+            cur_pin = None
+            if r % every == every - 1:
+                cur = barrier(cur, eager=True)
+            elif converged is not None:
+                cur_pin = cur = cur.cache()
+            done = converged is not None and converged(state, cur)
+            if pin is not None:
+                pin.unpersist()  # the superseded round
+            pin, state = cur_pin, cur
+            if done:
+                break
+    return state, [pin] if pin is not None else []

@@ -187,7 +187,7 @@ def test_iterative_graph_ops_release_cache_pins(spark):
     accumulated across queries in a long session. Every op must leave
     the SQL CacheManager as empty as it found it (results are sealed
     via localCheckpoint, which does not pin through CacheManager)."""
-    from hippollm_spark.operators import graph
+    from hippollm_spark.operators import dedup, graph
 
     spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
@@ -205,17 +205,43 @@ def test_iterative_graph_ops_release_cache_pins(spark):
         [("a", "b", 2), ("b", "c", 3), ("b", "a", 2), ("c", "b", 3)],
         "src string, dst string, w long",
     )
+    # loops long enough to cross cached rounds and a barrier round: a
+    # 7-entity chain (hash-min and the star alternation), a triangle
+    # with a 4-vertex tail (k=2 peels one tail vertex per round) and a
+    # chain of 7 duplicate pairs
+    chain = spark.createDataFrame(
+        [(i, f"e{i + j}") for i in range(6) for j in (0, 1)],
+        "fact_id long, entity string",
+    )
+    ring = [("x", "y"), ("y", "z"), ("z", "x"), ("z", "p1")]
+    ring += [(f"p{i}", f"p{i + 1}") for i in range(1, 4)]
+    tail = spark.createDataFrame(
+        ring + [(b, a) for a, b in ring], "src string, dst string"
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "doc_a long, doc_b long"
+    )
+
+    def canonicalize():
+        key = "spark.hippollm.dedup.canonicalize.collectEdgeMax"
+        spark.conf.set(key, "0")  # the distributed loop, not the collect
+        try:
+            return dedup.dedup_canonicalize(pairs)
+        finally:
+            spark.conf.unset(key)
 
     checks = [
-        lambda: graph.connected_components(edges),
-        lambda: graph.connected_components_star(edges),
+        lambda: graph.connected_components(chain),
+        lambda: graph.connected_components_star(chain),
         lambda: graph.shortest_paths(sym, ["a"], max_depth=4),
-        lambda: graph.label_propagation(sym, iterations=3),
-        lambda: graph.k_core(sym, 1, rounds=3),
+        lambda: graph.label_propagation(sym, iterations=4),
+        lambda: graph.k_core(tail, 2, rounds=6),
         lambda: graph.hits(sym, iterations=2),
-        lambda: graph.pagerank(sym, iterations=2),
-        lambda: graph.bellman_ford(wed, ["a"], rounds=3),
+        lambda: graph.pagerank(sym, iterations=4),
+        lambda: graph.bellman_ford(wed, ["a"], rounds=4),
         lambda: graph.explore(edges, ["a"], max_depth=3, max_relations=None),
+        lambda: graph.random_walks(sym, walks_per_vertex=1, walk_length=4),
+        canonicalize,
     ]
     for fn in checks:
         out = fn()

@@ -7,6 +7,7 @@ import ast
 from pathlib import Path
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from hippollm_spark import plan
@@ -188,6 +189,89 @@ def test_loop_tuning_is_per_session(spark, partitions_32):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
     finally:
         other.conf.unset("spark.sql.shuffle.partitions")
+
+
+def _inc(df):
+    return df.select((F.col("id") + 1).alias("id"))
+
+
+def _pinned(df) -> bool:
+    return df.storageLevel != StorageLevel.NONE
+
+
+def test_iterate_runs_every_round_lazily_without_converged(spark):
+    inputs = []
+
+    def step(df):
+        inputs.append(df)
+        return _inc(df)
+
+    out, pins = plan.iterate(spark.range(3), step, 5, every=3, n_keys=3)
+    assert len(inputs) == 5 and pins == []
+    assert not any(_pinned(df) for df in inputs)
+    assert sorted(r.id for r in out.collect()) == [5, 6, 7]
+
+
+def test_iterate_stops_at_first_converged(spark):
+    rounds = []
+
+    def converged(prev, cur):
+        rounds.append(cur.first().id)
+        return len(rounds) == 2
+
+    out, pins = plan.iterate(
+        spark.range(1), _inc, 10, every=3, n_keys=1, converged=converged
+    )
+    assert rounds == [1, 2]
+    assert out.first().id == 2
+    for p in pins:
+        p.unpersist()
+
+
+@pytest.mark.parametrize("converges", [False, True])
+def test_iterate_barriers_every_nth_round(spark, monkeypatch, converges):
+    steps, barriered = [], []
+    real_barrier = plan.barrier
+
+    def step(df):
+        steps.append(df)
+        return _inc(df)
+
+    def spy(df, eager=False):
+        barriered.append((len(steps), eager))
+        return real_barrier(df, eager=eager)
+
+    monkeypatch.setattr(plan, "barrier", spy)
+    converged = (lambda prev, cur: False) if converges else None
+    out, pins = plan.iterate(
+        spark.range(2), step, 7, every=3, n_keys=2, converged=converged
+    )
+    assert barriered == [(3, True), (6, True)]
+    assert out.first().id == 7
+    for p in pins:
+        p.unpersist()
+
+
+def test_iterate_releases_previous_pin_after_converged_reads_it(spark):
+    start = spark.range(3).cache()
+    frames, seen = [start], []
+
+    def step(df):
+        frames.append(_inc(df))
+        return frames[-1]
+
+    def converged(prev, cur):
+        # prev is still readable from its pin while the check runs
+        seen.append(_pinned(prev))
+        assert cur.join(prev, "id", "left_anti").count() == 1
+        return False
+
+    # rounds 1, 2 and 4 are cached, round 3 ends in a barrier
+    out, pins = plan.iterate(start, step, 4, every=3, n_keys=3, converged=converged)
+    assert seen == [True, True, True, False]
+    assert not any(_pinned(df) for df in frames[:3])  # start, rounds 1-2
+    assert len(pins) == 1 and pins[0] is out and _pinned(out)
+    out.unpersist()
 
 
 def _percentiles(spark):

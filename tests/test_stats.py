@@ -205,3 +205,31 @@ def test_global_percentile_values_fast_path_parity(spark):
     finally:
         spark.conf.unset(key)
     assert fast == slow  # exact equality, not approx: same IEEE ops
+
+
+def test_global_percentile_values_row_cap_on_underestimate(spark, monkeypatch):
+    # without CBO the byte estimate can be far too low; the fast path
+    # must still refuse to pull more than gate_bytes // 8 rows and fall
+    # through to the distributed path, whose values it must return
+    from hippollm_spark import plan
+    from hippollm_spark.operators.stats import global_percentile_values
+
+    rows = [(float((i * 37) % 101),) for i in range(200)]
+    df = spark.createDataFrame(rows, "v double")
+    ps = [0.1, 0.5, 0.9]
+    key = "spark.hippollm.percentiles.smallCollectMaxBytes"
+    spark.conf.set(key, "0")
+    try:
+        slow = global_percentile_values(df, "v", ps)
+        spark.conf.set(key, "80")  # cap = 10 rows, far below the 200
+        monkeypatch.setattr(plan, "estimated_bytes", lambda _df: 1)
+        barriers = []
+        real_barrier = plan.barrier
+        monkeypatch.setattr(
+            plan, "barrier", lambda d, eager=False: barriers.append(d) or real_barrier(d, eager)
+        )
+        capped = global_percentile_values(df, "v", ps)
+    finally:
+        spark.conf.unset(key)
+    assert len(barriers) == 1  # the distributed path ran
+    assert capped == slow
