@@ -259,29 +259,12 @@ def ivf_build(
             vecs, k=nlist, iterations=iters, id_col=id_col, vec_col=vec_col
         )
         cents = np.array(cents_e6, dtype=np.float64) / 1e6
-
-        @F.pandas_udf("int")
-        def _assign_d(emb: pd.Series) -> pd.Series:
-            if len(emb) == 0:
-                return pd.Series(np.zeros(0, dtype=np.int32))
-            mat = np.array(emb.tolist(), dtype=np.float64)
-            d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-            return pd.Series(d.argmin(1).astype(np.int32))
-
-        return vecs.withColumn("list_id", _assign_d(F.col(vec_col))), cents
-    sample = np.array(
-        [r[0] for r in vecs.select(vec_col).limit(100_000).collect()],
-        dtype=np.float64,
-    )
-    rng = np.random.RandomState(seed)
-    cents = sample[rng.choice(len(sample), size=min(nlist, len(sample)), replace=False)]
-    for _ in range(iters):
-        d = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        for j in range(len(cents)):
-            mask = assign == j
-            if mask.any():
-                cents[j] = sample[mask].mean(0)
+    else:
+        sample = np.array(
+            [r[0] for r in vecs.select(vec_col).limit(100_000).collect()],
+            dtype=np.float64,
+        )
+        cents = _lloyd(sample, nlist, iters, np.random.RandomState(seed))
 
     @F.pandas_udf("int")
     def _assign(emb: pd.Series) -> pd.Series:
@@ -291,8 +274,7 @@ def ivf_build(
         d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
         return pd.Series(d.argmin(1).astype(np.int32))
 
-    assigned = vecs.withColumn("list_id", _assign(F.col(vec_col)))
-    return assigned, cents
+    return vecs.withColumn("list_id", _assign(F.col(vec_col))), cents
 
 
 def ivf_topk(

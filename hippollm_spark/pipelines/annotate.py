@@ -23,7 +23,9 @@ existing store facts and (b) all *earlier-ordinal* facts of the same
 batch — identical results unless a fact matches an earlier fact that
 was itself dropped as redundant (a chain), which the scripted-model
 tests pin down. Exact serial parity is available by feeding documents
-one at a time.
+one at a time. The batch ordinal ``__ord__`` is the struct (doc_id,
+chunk_idx, fact_ordinal): structs compare field by field, so it orders
+facts like the reference's serial loop and costs no ranking job.
 
 Backends (LLM / NLI) are plain picklable objects shipped to executors
 (deterministic ScriptedLLM / ScriptedNLI in tests — FIXTURES.md §5).
@@ -210,14 +212,15 @@ def dedup_facts(
     entailment gate (batched pair scoring) and the LLM confrontation
     (yes/no grammar) on survivors only. Redundant facts merge
     provenance into their match (handled by caller); fresh facts
-    survive. Returns new_facts + (redundant BOOLEAN, dup_of BIGINT —
-    the matched STORE fact id, NULL when the match is an earlier
-    batch fact, dup_of_ord BIGINT — the matched earlier BATCH
-    ordinal, NULL when the match is a store fact). The two id
-    namespaces stay in separate columns: folding the batch ordinal
-    into dup_of (e.g. +1e9) would make a store id ≥ 1e9 ambiguous
-    with a biased ordinal, both in the deterministic tie-break and
-    when decoding dup_of.
+    survive. ``new_facts`` is (``__ord__`` of any orderable type,
+    fact_text, optionally its ``embedding``). Returns new_facts +
+    (redundant BOOLEAN, dup_of BIGINT — the matched STORE fact id,
+    NULL when the match is an earlier batch fact, dup_of_ord — the
+    matched earlier BATCH fact's ``__ord__``, NULL when the match is a
+    store fact). The two id namespaces stay in separate columns:
+    folding the batch ordinal into dup_of (e.g. +1e9) would make a
+    store id ≥ 1e9 ambiguous with a biased ordinal, both in the
+    deterministic tie-break and when decoding dup_of.
 
     Scale shape: candidate generation scores (id, embedding) pairs
     only — texts join AFTER the per-fact top-k cut, so the expensive
@@ -226,6 +229,8 @@ def dedup_facts(
     run) and no fact text ever rides the distance shuffle. NLI calls
     are batched per Arrow batch via ``nli.score_pairs`` when the
     backend provides it (CrossEncoder-style pair-list API).
+    ``new_facts`` is read five times: barrier it if it is a model
+    stage's output.
 
     ``index``: an optional ``similarity.VecIndex`` over the STORE's
     fact embeddings (id_col='id'). With it, store candidates come from
@@ -241,23 +246,24 @@ def dedup_facts(
     """
     from hippollm_spark.functions import vectors as V
 
-    new_facts = new_facts.withColumn("embedding", embed(F.col("fact_text")))
-    n_existing = store.facts.count()
+    if "embedding" not in new_facts.columns:
+        new_facts = new_facts.withColumn("embedding", embed(F.col("fact_text")))
+    ord_type = new_facts.schema["__ord__"].dataType
+    no_id = F.lit(None).cast("long").alias("cand_id")
+    no_ord = F.lit(None).cast(ord_type).alias("cand_ord")
 
     q = F.broadcast(
         new_facts.select("__ord__", F.col("embedding").alias("__qv__"))
     )
     batch_pool = new_facts.select(
-        F.lit(None).cast("long").alias("cand_id"),
-        F.col("__ord__").alias("cand_ord"),
-        F.col("embedding").alias("__cv__"),
+        no_id, F.col("__ord__").alias("cand_ord"), F.col("embedding").alias("__cv__")
     )
-    # batch candidates only pair with LATER ordinals (sequential
-    # semantics); store candidates pair with every new fact
-    scored_batch = (
-        batch_pool.crossJoin(q)
-        .filter(F.col("cand_ord") < F.col("__ord__"))
-        .select(
+    store_pool = store.facts.select(
+        F.col("id").alias("cand_id"), no_ord, F.col("embedding").alias("__cv__")
+    )
+
+    def _score(pool):
+        return pool.crossJoin(q).select(
             "__ord__",
             "cand_id",
             "cand_ord",
@@ -265,10 +271,11 @@ def dedup_facts(
                 "__score__"
             ),
         )
-    )
-    if n_existing == 0:
-        scored_ids = scored_batch
-    elif index is not None:
+
+    # batch candidates only pair with LATER ordinals (sequential
+    # semantics); store candidates pair with every new fact
+    scored_batch = _score(batch_pool).filter(F.col("cand_ord") < F.col("__ord__"))
+    if index is not None:
         probe = index.topk(
             new_facts.select(
                 F.col("__ord__").alias("query_id"),
@@ -280,36 +287,24 @@ def dedup_facts(
         scored_store = probe.select(
             F.col("query_id").alias("__ord__"),
             F.col("vec_id").alias("cand_id"),
-            F.lit(None).cast("long").alias("cand_ord"),
+            no_ord,
             F.col("score").alias("__score__"),
         )
-        scored_ids = scored_batch.unionByName(scored_store)
     else:
-        store_pool = store.facts.select(
-            F.col("id").alias("cand_id"),
-            F.lit(None).cast("long").alias("cand_ord"),
-            F.col("embedding").alias("__cv__"),
-        )
-        scored_store = store_pool.crossJoin(q).select(
-            "__ord__",
-            "cand_id",
-            "cand_ord",
-            F.round(-V.l2_distance(F.col("__cv__"), F.col("__qv__")), 6).alias(
-                "__score__"
-            ),
-        )
-        scored_ids = scored_batch.unionByName(scored_store)
+        scored_store = _score(store_pool)
     # Deterministic tie-break on 6dp-rounded score ties: store
     # candidates (cand_id set) before batch candidates, then by
-    # id/ordinal — a two-column order, never a folded BIGINT (store
-    # ids are unbounded; see docstring).
+    # id/ordinal — one column per namespace, never a folded BIGINT
+    # (store ids are unbounded; see docstring).
     w = Window.partitionBy("__ord__").orderBy(
         F.desc("__score__"),
         F.asc(F.col("cand_id").isNull()),
-        F.asc(F.coalesce("cand_id", "cand_ord")),
+        F.asc("cand_id"),
+        F.asc("cand_ord"),
     )
     topk = (
-        scored_ids.withColumn("__rk__", F.row_number().over(w))
+        scored_batch.unionByName(scored_store)
+        .withColumn("__rk__", F.row_number().over(w))
         .filter(F.col("__rk__") <= k)
         .drop("__rk__", "__score__")
     )
@@ -318,19 +313,20 @@ def dedup_facts(
     bt = new_facts.select(
         F.col("__ord__").alias("cand_ord"), F.col("fact_text").alias("__bt__")
     )
-    pairs = topk.join(bt, "cand_ord", "left")
-    if n_existing > 0:
-        st = store.facts.select(
-            F.col("id").alias("cand_id"), F.col("text").alias("__st__")
-        )
-        pairs = pairs.join(st, "cand_id", "left").withColumn(
-            "cand_text", F.coalesce("__st__", "__bt__")
-        ).drop("__st__", "__bt__")
-    else:
-        pairs = pairs.withColumn("cand_text", F.col("__bt__")).drop("__bt__")
+    st = store.facts.select(
+        F.col("id").alias("cand_id"), F.col("text").alias("__st__")
+    )
+    pairs = (
+        topk.join(bt, "cand_ord", "left")
+        .join(st, "cand_id", "left")
+        .withColumn("cand_text", F.coalesce("__st__", "__bt__"))
+        .drop("__st__", "__bt__")
+    )
 
     fact_texts = new_facts.select("__ord__", "fact_text")
     scored = pairs.join(fact_texts, "__ord__")
+    keys = ["__ord__", "cand_id", "cand_ord"]
+    out_schema = scored.select(*keys, F.lit(None).cast("boolean").alias("redundant")).schema
 
     def _gate(batches):
         for pdf in batches:
@@ -350,20 +346,18 @@ def dedup_facts(
                     )
                     ok = ans.strip().lower().startswith("y")
                 verdicts.append(ok)
-            res = pdf[["__ord__", "cand_id", "cand_ord"]].copy()
+            res = pdf[keys].copy()
             res["redundant"] = verdicts
             yield res
 
-    verdicts = scored.mapInPandas(
-        _gate, "__ord__ long, cand_id long, cand_ord long, redundant boolean"
-    )
-    # min over (is_batch, id) struct = lexicographic: any store match
-    # wins over any batch match, then lowest id/ordinal — the same
-    # precedence as the top-k tie-break, without a folded namespace.
+    verdicts = scored.mapInPandas(_gate, out_schema)
+    # min over (is_batch, id, ordinal) struct = lexicographic: any
+    # store match wins over any batch match, then lowest id/ordinal —
+    # the same precedence as the top-k tie-break, without a folded
+    # namespace.
     best = F.min(
         F.struct(
-            F.col("cand_id").isNull().alias("is_batch"),
-            F.coalesce("cand_id", "cand_ord").alias("cid"),
+            F.col("cand_id").isNull().alias("is_batch"), "cand_id", "cand_ord"
         )
     ).alias("__best__")
     dup = (
@@ -372,8 +366,8 @@ def dedup_facts(
         .agg(best)
         .select(
             "__ord__",
-            F.when(~F.col("__best__.is_batch"), F.col("__best__.cid")).alias("dup_of"),
-            F.when(F.col("__best__.is_batch"), F.col("__best__.cid")).alias("dup_of_ord"),
+            F.col("__best__.cand_id").alias("dup_of"),
+            F.col("__best__.cand_ord").alias("dup_of_ord"),
         )
     )
     return new_facts.join(dup, "__ord__", "left").withColumn(
@@ -386,8 +380,9 @@ def dedup_facts(
 # --------------------------------------------------------------------------
 
 def extract_entities(facts: DataFrame, llm) -> DataFrame:
-    """(… , entity_mention STRING) — LLM bullet list per fact, first
-    block only (reference annotator.py:148-153)."""
+    """(__ord__, entity_mention STRING) — LLM bullet list per fact,
+    first block only (reference annotator.py:148-153). ``__ord__``
+    keeps the input's type."""
 
     def _run(batches):
         for pdf in batches:
@@ -399,8 +394,9 @@ def extract_entities(facts: DataFrame, llm) -> DataFrame:
                     rows.append((ordi, m))
             yield pd.DataFrame(rows, columns=["__ord__", "entity_mention"])
 
-    return facts.select(F.col("__ord__"), "fact_text").mapInPandas(
-        _run, "__ord__ long, entity_mention string"
+    facts = facts.select("__ord__", "fact_text")
+    return facts.mapInPandas(
+        _run, facts.withColumnRenamed("fact_text", "entity_mention").schema
     )
 
 
@@ -432,23 +428,13 @@ def resolve_entities(
     nprobe = nlist reproduces the exact candidates.
     """
     uniq = mentions.select("entity_mention").distinct()
-    n_entities = store.entities.count()
-    if n_entities == 0:
-        return uniq.select(
-            "entity_mention",
-            F.col("entity_mention").alias("resolved"),
-            F.lit(True).alias("is_new"),
-        )
-
-    exact = uniq.join(
-        store.entities.select(F.col("name").alias("entity_mention")),
+    names = store.entities.select(F.col("name").alias("entity_mention"))
+    exact = uniq.join(names, "entity_mention", "semi").select(
         "entity_mention",
-        "semi",
-    ).withColumn("resolved", F.col("entity_mention")).withColumn("is_new", F.lit(False))
-
-    unresolved = uniq.join(exact.select("entity_mention"), "entity_mention", "anti")
-    if unresolved.isEmpty():
-        return exact
+        F.col("entity_mention").alias("resolved"),
+        F.lit(False).alias("is_new"),
+    )
+    unresolved = uniq.join(names, "entity_mention", "anti")
 
     from hippollm_spark.operators.similarity import topk_per_query
 
@@ -501,13 +487,13 @@ def resolve_entities(
     gated = cand.mapInPandas(
         _gate, "entity_mention string, resolved string, is_new boolean"
     )
-    # mentions with zero kNN candidates (store smaller than k edge case)
-    uncovered = unresolved.join(gated.select("entity_mention"), "entity_mention", "anti").select(
+    # a mention with no kNN candidate (an empty store) is a new entity
+    linked = unresolved.join(gated, "entity_mention", "left").select(
         "entity_mention",
-        F.col("entity_mention").alias("resolved"),
-        F.lit(True).alias("is_new"),
+        F.coalesce("resolved", "entity_mention").alias("resolved"),
+        F.coalesce("is_new", F.lit(True)).alias("is_new"),
     )
-    return exact.unionByName(gated).unionByName(uncovered)
+    return exact.unionByName(linked)
 
 
 # --------------------------------------------------------------------------
@@ -563,8 +549,11 @@ def annotate_documents(
 ) -> HippoStore:
     """Run the staged annotation pipeline and return the updated store.
 
-    Every stage is one Spark job over the whole batch of documents;
-    model calls are Arrow-batched on executors. Pass an
+    Each model stage (contextualize, extract, reformulate, the fact
+    embedding, the dedup gate, entity extraction, the resolve gate)
+    runs once over the whole batch of documents, with its calls
+    Arrow-batched on executors; a batch still takes several Spark jobs,
+    one per barrier and exchange stage. Pass an
     ``lineage.ActionLog`` as ``log`` for the O1 structured action trail
     (stage boundaries + config; reference log_helpers.py:12-52 logs
     every model call — per-call records live executor-side, so the
@@ -611,27 +600,22 @@ def annotate_documents(
         chunks = splitter(docs, cfg.chunk_size)
 
     raw_facts = extract_facts(chunks, ctxs, llm, cfg.inference_partitions)
-    # Stable batch ordinal = document order, chunk order, bullet order —
-    # the reference's serial processing order (annotator.py:185-218),
-    # stamped windowlessly (range exchange + broadcast offsets) so even
-    # a huge annotation batch never funnels through one task.
-    from hippollm_spark.operators.ranks import distributed_rank
-
-    raw_facts = distributed_rank(
-        raw_facts,
-        ["doc_id", "chunk_idx", "fact_ordinal"],
-        rank_col="__ord__",
+    # The LLM chain and the fact embedding run once, here: dedup and
+    # the later stages read the facts many times. ``__ord__`` = doc,
+    # chunk, bullet order: the reference's loop (annotator.py:185-218).
+    reformed = plan.barrier(
+        reformulate(raw_facts, ctxs, llm, cfg.inference_partitions)
+        .withColumn("embedding", embed(F.col("fact_text")))
+        .withColumn("__ord__", F.struct("doc_id", "chunk_idx", "fact_ordinal")),
+        eager=True,
     )
-    reformed = reformulate(raw_facts, ctxs, llm, cfg.inference_partitions)
+    # checkpoints, not caches: blocks are GC-managed, never left pinned
     gated = plan.barrier(
         dedup_facts(reformed, store, llm, nli, embed, cfg.k_dedup, index=fact_index)
     )
-    # ^ lazy checkpoint, not cache: same materialize-once guarantee for
-    #   the multi-consumer frames (LLM stages must not re-run), but the
-    #   blocks are GC-managed instead of pinned in CacheManager
     fresh = gated.filter(~F.col("redundant"))
 
-    mentions = extract_entities(fresh, llm)
+    mentions = plan.barrier(extract_entities(fresh, llm), eager=True)
     resolved = plan.barrier(
         resolve_entities(mentions, store, llm, nli, embed, cfg.k_link, index=entity_index)
     )
@@ -646,10 +630,9 @@ def annotate_documents(
         .groupBy("__ord__")
         .agg(F.array_distinct(F.collect_list("resolved")).alias("entities"))
     )
-    doc_info = docs.select("doc_id", "title", "url")
     new_facts = (
         fresh.join(fact_entities, "__ord__", "left")
-        .join(F.broadcast(doc_info), "doc_id")
+        .join(F.broadcast(ctxs.select("doc_id", "title", "url")), "doc_id")
         .select(
             F.col("fact_text").alias("text"),
             F.coalesce("entities", F.array().cast("array<string>")).alias("entities"),

@@ -12,7 +12,8 @@ has no counterpart there, so every such decision lives here once:
 - ``iterate``       — the round driver of every state-replacing loop:
   barrier cadence, cache pins, convergence and early exit;
 - ``conf_int`` / ``shuffle_partitions`` — integer conf reads, one rule:
-  unset means the default, a non-integer raises naming the key.
+  unset means the default, a non-integer raises naming the key (Spark's
+  own partition count falls back to the default parallelism instead).
 
 The ``spark.hippollm.*`` keys the operators read (all integers):
 
@@ -58,8 +59,14 @@ def conf_int(spark, key: str, default: int | None) -> int | None:
 
 def shuffle_partitions(spark) -> int:
     """The session's ``spark.sql.shuffle.partitions`` (Spark's own
-    default, 200, when unset)."""
-    return conf_int(spark, "spark.sql.shuffle.partitions", 200)
+    default, 200, when unset). Unlike the ``spark.hippollm.*`` keys, a
+    non-integer value is not an error: some Spark distributions accept
+    ``auto`` here and size shuffles themselves, so it reads as the
+    default parallelism."""
+    try:
+        return conf_int(spark, "spark.sql.shuffle.partitions", 200)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
 
 
 def estimated_bytes(df: DataFrame) -> int | None:
@@ -112,6 +119,14 @@ def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     The returned frame is a leaf, so optimizer rules can no longer sink
     filters below it or duplicate the subtree it cut off, and iterative
     plans stop growing.
+
+    A lazy barrier is not free under AQE: cutting the plan finalizes
+    it, so every shuffle and broadcast stage below the cut runs at the
+    call, and only the last stage waits for the first action. A model
+    stage below the cut runs there once per reference to it in the
+    plan: the lazy barrier after ingest's dedup gate ran 15 jobs at the
+    call while the gate's input was still an unmaterialized LLM chain
+    (perfbench ingest, seed 1, 4 cores).
 
     - Without a checkpoint directory: ``localCheckpoint`` — blocks in
       NON-replicated executor storage. Free and correct on local[*]

@@ -11,6 +11,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+def _default_heap() -> str:
+    """48g, or half the machine's memory when that is less: a heap
+    larger than the RAM never collects before the machine runs out."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, total_kb // 2048)}m"
+
+
 _DEFAULTS = {
     # AQE: runtime coalesce + skew-join mitigation — essential at scale,
     # harmless locally.
@@ -31,7 +42,7 @@ _DEFAULTS = {
     # for pruning + co-located joins, so auto-disable never helps here.
     "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap(),
     # InferFiltersFromGenerate injects `size(arr)>0 AND isnotnull(arr)`
     # under every explode. Every Generate in this engine explodes a
     # COMPUTED array (shingles/n-grams/bands: tokenizer + zip_with

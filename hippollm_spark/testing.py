@@ -75,6 +75,40 @@ class PairCountingNLI:
         return False
 
 
+class CountingLLM:
+    """LLM spy that counts ``invoke`` calls per prompt template of
+    ``pipelines.prompts`` on Spark accumulators and answers through
+    ``inner``. Executor-side calls reach the driver with each finished
+    task, so ``counts()`` tells how many times a model stage ran."""
+
+    KINDS = (
+        "CONTEXTUALIZATION",
+        "ANNOTATION",
+        "REFORMULATION",
+        "CONFRONTATION",
+        "ENTITY_EXTRACTION",
+        "ENTITY_EQUIVALENCE",
+    )
+
+    def __init__(self, spark, inner):
+        from hippollm_spark.pipelines import prompts
+
+        self.inner = inner
+        self.accs = {k: spark.sparkContext.accumulator(0) for k in self.KINDS}
+        # a template's text before its first slot identifies it
+        self.heads = {k: getattr(prompts, k).split("{", 1)[0] for k in self.KINDS}
+
+    def invoke(self, prompt, grammar=None, max_tokens=None, stop=None) -> str:
+        for kind, head in self.heads.items():
+            if prompt.startswith(head):
+                self.accs[kind].add(1)
+                break
+        return self.inner.invoke(prompt, grammar, max_tokens, stop)
+
+    def counts(self) -> dict[str, int]:
+        return {k: a.value for k, a in self.accs.items()}
+
+
 class FakeSentenceTransformerModel:
     """Deterministic stand-in for a SentenceTransformer: vector =
     [len(text), 1.0, 0.0]. Module-level so executor processes can

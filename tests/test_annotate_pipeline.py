@@ -71,6 +71,13 @@ def test_annotate_end_to_end(spark, seeded_store):
     # dropped; two fresh facts appended with dense ids 2, 3.
     facts = {r["id"]: r for r in store.facts.collect()}
     assert sorted(facts) == [0, 1, 2, 3]
+    # ids follow (doc, chunk, bullet) order
+    assert {i: r["text"] for i, r in facts.items()} == {
+        0: "Paris is the capital of France",
+        1: "London is the capital of the UK",
+        2: "The Eiffel Tower is in Paris",
+        3: "The Seine flows through Paris",
+    }
     texts = {r["text"] for r in facts.values()}
     assert "The Eiffel Tower is in Paris" in texts
     assert "The Seine flows through Paris" in texts
@@ -97,6 +104,35 @@ def test_annotate_end_to_end(spark, seeded_store):
     # Embeddings present on everything that was appended (integrity P7).
     rep = store.check_integrity()
     assert rep["ok"] == 1
+
+
+def test_annotate_runs_each_model_stage_once(spark, seeded_store):
+    """Every LLM stage is called once per input row: a stage whose
+    output several plans read must be materialized, not re-run. Two
+    docs, three chunks, four raw facts; one fact restates a stored
+    fact, so three are fresh."""
+    from hippollm_spark.testing import CountingLLM
+
+    docs = spark.createDataFrame(
+        [
+            (100, "Paris article", "http://wiki/paris", DOC, None),
+            (101, "Seine article", "http://wiki/seine", CHUNK2, None),
+        ],
+        "doc_id long, title string, url string, content string, date timestamp",
+    )
+    llm = CountingLLM(spark, ScriptedLLM(script=LLM_SCRIPT))
+    n_before = seeded_store.facts.count()
+    store = annotate_documents(
+        seeded_store, docs, llm, ScriptedNLI(table=NLI_TABLE),
+        hash_embedding_udf(DIM), AnnotateConfig(splitter="paragraph", embed_dim=DIM),
+    )
+    fresh = store.facts.count() - n_before
+    assert fresh == 3
+    calls = llm.counts()
+    assert calls["CONTEXTUALIZATION"] == 2  # docs
+    assert calls["ANNOTATION"] == 3  # chunks
+    assert calls["REFORMULATION"] == 4  # non-empty raw facts
+    assert calls["ENTITY_EXTRACTION"] == fresh
 
 
 def test_annotate_empty_store_bootstrap(spark):

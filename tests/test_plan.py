@@ -305,3 +305,19 @@ def test_invalid_conf_raises_naming_the_key(spark, key, run):
     finally:
         spark.conf.unset(key)
     run(spark)
+
+
+def test_shuffle_partitions_non_integer_reads_default_parallelism(spark, monkeypatch):
+    # OSS Spark rejects setting "auto", so the conf read is patched
+    real_get = spark.conf.get
+    gate = "spark.hippollm.percentiles.smallCollectMaxBytes"
+
+    def fake_get(key, *args, **kw):
+        if key in ("spark.sql.shuffle.partitions", gate):
+            return "auto"
+        return real_get(key, *args, **kw)
+
+    monkeypatch.setattr(spark.conf, "get", fake_get)
+    assert plan.shuffle_partitions(spark) == spark.sparkContext.defaultParallelism
+    with pytest.raises(ValueError, match=gate):
+        plan.conf_int(spark, gate, 7)

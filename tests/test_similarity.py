@@ -80,6 +80,32 @@ def test_ivf_topk_recall(spark, embeddings):
     assert full == exact
 
 
+def test_ivf_build_centroids_fixed_seed(spark):
+    """ivf_build trains with ``_lloyd``: the seeded sample init and the
+    Lloyd steps below, in the same order, so the centroids are
+    bit-identical to this replica."""
+    rng = np.random.default_rng(3)
+    pts = rng.normal(size=(120, 6)).round(3)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in p]) for i, p in enumerate(pts)],
+        "vec_id long, embedding array<double>",
+    )
+    assigned, cents = similarity.ivf_build(vecs, nlist=5, iters=4, seed=11)
+
+    sample = pts.astype(np.float64)
+    init = np.random.RandomState(11)
+    ref = sample[init.choice(len(sample), size=5, replace=False)]
+    for _ in range(4):
+        assign = ((sample[:, None, :] - ref[None, :, :]) ** 2).sum(-1).argmin(1)
+        for j in range(len(ref)):
+            if (assign == j).any():
+                ref[j] = sample[assign == j].mean(0)
+    assert np.array_equal(cents, ref)
+    got = dict(assigned.select("vec_id", "list_id").collect())
+    want = ((sample[:, None, :] - ref[None, :, :]) ** 2).sum(-1).argmin(1)
+    assert [got[i] for i in range(len(pts))] == want.tolist()
+
+
 def test_topk_pandas_method_matches_sql(spark, embeddings):
     from pyspark.sql import functions as F
 
