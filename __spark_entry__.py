@@ -1609,6 +1609,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB reproduces it bit-for-bit from the same literals at any sf.
     TakeOrdered, no shuffle, original float vectors never re-read after
     the quantize step."""
+    from hippollm_spark.functions import vectors as V
     from hippollm_spark.operators.similarity import (
         load_pq_codebooks_e6,
         pq_adc_scan_quantized,
@@ -1618,12 +1619,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = load_pq_codebooks_e6()
     # quantize the query with the ENGINE's half-up round (same expr as
     # the table scan), so the oracle's round(x*1e6) matches exactly
-    q_e6 = emb.filter("vec_id = 3").select(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("q")
-    ).first()["q"]
+    q_e6 = emb.filter("vec_id = 3").select(V.to_e6("embedding").alias("q")).first()["q"]
     import numpy as np
 
     return pq_adc_scan_quantized(
@@ -1641,6 +1637,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ADC LUTs. Every step is exact BIGINT with (dist, id)
     tie-breaks, so DuckDB replays coarse argmin, probe selection,
     residual encode, and LUT gather bit-for-bit at any sf."""
+    from hippollm_spark.functions import vectors as V
     from hippollm_spark.operators.similarity import (
         ivfpq_scan_quantized,
         load_ivfpq_e6,
@@ -1648,12 +1645,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     art = load_ivfpq_e6()
-    q_e6 = emb.filter("vec_id = 3").select(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("q")
-    ).first()["q"]
+    q_e6 = emb.filter("vec_id = 3").select(V.to_e6("embedding").alias("q")).first()["q"]
     import numpy as np
 
     return ivfpq_scan_quantized(
@@ -1674,6 +1666,7 @@ def q_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ-distortion-limited ranking into coarse-quantizer-limited
     recall (the measured curve is in COVERAGE.md); every step exact
     BIGINT, so DuckDB replays shortlist AND re-rank bit-for-bit."""
+    from hippollm_spark.functions import vectors as V
     from hippollm_spark.operators.similarity import (
         ivfpq_topk_rerank,
         load_ivfpq_e6,
@@ -1681,12 +1674,7 @@ def q_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     art = load_ivfpq_e6()
-    q_e6 = emb.filter("vec_id = 3").select(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("q")
-    ).first()["q"]
+    q_e6 = emb.filter("vec_id = 3").select(V.to_e6("embedding").alias("q")).first()["q"]
     import numpy as np
 
     return ivfpq_topk_rerank(
@@ -1747,6 +1735,7 @@ def q_v3_knn_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-oracled, not merely recall-tested."""
     import numpy as np
 
+    from hippollm_spark.functions import vectors as V
     from hippollm_spark.operators.similarity import (
         ivf_topk_indexed_e6,
         load_ivfpq_e6,
@@ -1758,10 +1747,7 @@ def q_v3_knn_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serving path's per-query driver cost is a single collect
     q_row = emb.filter("vec_id = 0").select(
         F.col("embedding").alias("qv"),
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("q"),
+        V.to_e6("embedding").alias("q"),
     ).first()
     out = ivf_topk_indexed_e6(
         spark,
@@ -2791,7 +2777,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     return semantic_dedup(
-        emb, k=8, iterations=3, method="pandas",
+        emb, k=8, iterations=3,
         assigned=_kmeans_assigned(spark, sf_dir),
     ).orderBy("cluster")
 
@@ -2807,7 +2793,7 @@ def q_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return (
         semantic_prune(
-            emb, eps_e12=1_600_000_000_000, k=8, iterations=3, method="pandas",
+            emb, eps_e12=1_600_000_000_000, k=8, iterations=3,
             assigned=_kmeans_assigned(spark, sf_dir),
         )
         .withColumnRenamed("__id__", "vec_id")
@@ -2826,7 +2812,7 @@ def q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     return (
         cluster_stratified_sample(
-            emb, 20, k=8, iterations=3, method="pandas",
+            emb, 20, k=8, iterations=3,
             assigned=_kmeans_assigned(spark, sf_dir),
         )
         .withColumnRenamed("__id__", "vec_id")

@@ -24,6 +24,15 @@ def to_vec(values: Sequence[float]) -> Column:
     return F.array(*[F.lit(float(v)) for v in values])
 
 
+def to_e6(col: Column | str) -> Column:
+    """ARRAY<BIGINT> of integer micro-units, round(double(x)·1e6) per
+    element. ``F.round`` is HALF_UP (away from zero), identical to
+    DuckDB ``round()`` — the quantize rule every exact-integer vector
+    path and its oracle twin share."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.transform(c, lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"))
+
+
 def _as_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")

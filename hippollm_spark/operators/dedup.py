@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hippollm_spark import plan
+from hippollm_spark.functions import vectors as V
 
 # Scale-hazard warnings fire once per process per call site: the
 # hazardous defaults exist for the oracle checks (DuckDB replays the
@@ -769,13 +770,8 @@ def embedding_dup_pairs(
         n_blocks = max(1, min(64, vecs.count() // 2000))
     base = vecs.select(
         F.col(id_col).alias("__id__"),
-        # e6 quantization OUTSIDE the UDF: F.round is HALF_UP (away
-        # from zero), identical to DuckDB round() — the same rule the
-        # PQ/IVF artifacts use
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("__v__"),
+        # e6 quantization OUTSIDE the UDF (the PQ/IVF artifacts' rule)
+        V.to_e6(vec_col).alias("__v__"),
         (F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))).alias("__blk__"),
     )
     pairs = [(i, j) for i in range(n_blocks) for j in range(n_blocks) if i <= j]

@@ -14,40 +14,19 @@ partition-local top-k heaps merged on the driver, **no shuffle** — which
 is exactly the plan we want at 100 TB: one scan, no data movement beyond
 k rows per partition.
 
-Scale paths:
-- ``method='sql'`` keeps scoring inside whole-stage codegen.
-- ``method='pandas'`` scores with a vectorized numpy pandas_udf — wins
-  for high dims × many rows where the unrolled SQL expression tree gets
-  expensive to evaluate.
-- ANN (LSH / IVF partition pruning) lives in ``operators.similarity``;
-  it is benchmarked by recall against this exact operator, never by hash.
+Scoring stays inside whole-stage codegen. ANN (LSH / IVF partition
+pruning) lives in ``operators.similarity``; it is benchmarked by recall
+against this exact operator, never by hash.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from hippollm_spark.functions import vectors as V
-
-
-def _pandas_l2(query: Sequence[float]) -> Column:
-    q = np.asarray(list(query), dtype=np.float64)
-
-    @F.pandas_udf(T.DoubleType())
-    def _dist(emb: pd.Series) -> pd.Series:
-        mat = np.array(emb.tolist(), dtype=np.float64)
-        if mat.size == 0:
-            return pd.Series(np.zeros(0))
-        d = mat - q
-        return pd.Series(np.sqrt(np.einsum("ij,ij->i", d, d)))
-
-    return _dist(F.col("__emb__"))
 
 
 def knn(
@@ -58,7 +37,6 @@ def knn(
     vec_col: str = "embedding",
     id_col: str = "id",
     metric: str = "l2",
-    method: str = "sql",
     keep_distance: bool = True,
 ) -> DataFrame:
     """Exact top-k rows of ``df`` nearest to ``query_vec``.
@@ -68,12 +46,7 @@ def knn(
     ``limit`` (reference storage.py:269 clamps explicitly).
     """
     if metric == "l2":
-        if method == "pandas":
-            dist = _pandas_l2(query_vec)
-            scored = df.withColumn("__emb__", F.col(vec_col).cast("array<double>"))
-            scored = scored.withColumn("distance", dist).drop("__emb__")
-        else:
-            scored = df.withColumn("distance", V.l2_distance(vec_col, query_vec))
+        scored = df.withColumn("distance", V.l2_distance(vec_col, query_vec))
     elif metric == "cosine":
         scored = df.withColumn("distance", V.cosine_distance(vec_col, query_vec))
     else:

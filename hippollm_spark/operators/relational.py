@@ -255,12 +255,14 @@ def add_facts(
     embed=None,
 ) -> DataFrame:
     """M2 batch — append facts with dense ids continuing from
-    max(id)+1 (reference storage.py:227-248)."""
+    max(id)+1 (reference storage.py:227-248). ``embed`` runs only when
+    ``new`` carries no ``embedding`` column (the `dedup_facts` rule): a
+    pipeline that already embedded the batch passes its vectors in."""
     if next_id is None:
         row = facts.agg(F.max("id")).first()
         next_id = (row[0] + 1) if row and row[0] is not None else 0
     assigned = with_dense_ids(new, offset=next_id)
-    if embed is not None:
+    if embed is not None and "embedding" not in assigned.columns:
         assigned = assigned.withColumn("embedding", embed(F.col("text")))
     if "confidence" not in assigned.columns:
         assigned = assigned.withColumn("confidence", F.lit(1.0))

@@ -41,7 +41,6 @@ def topk_per_query(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     metric: str = "cosine",
-    method: str = "sql",
     spread: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbours for each query vector.
@@ -51,89 +50,50 @@ def topk_per_query(
     (query_id, vec_id, score) — never the vectors themselves.
     Output: (query_id, vec_id, rank INT, score 6dp), score = cosine
     similarity (desc) or negative L2 (so rank 1 is always 'closest').
-
-    ``method='sql'`` scores with JVM expressions (sequential fold —
-    bit-identical to the DuckDB oracle). ``method='pandas'`` collects
-    the query matrix to the driver and scores each Arrow batch with one
-    numpy matmul + per-partition top-k prefilter — ~3-5× faster at
-    millions of rows; float64 matmul may differ from the sequential
-    fold in the last ulp, so it is recall-grade, not hash-grade.
+    Scores are JVM expressions (sequential fold — bit-identical to the
+    DuckDB oracle).
     """
-    if method == "pandas":
-        import numpy as np
-        import pandas as pd
+    q = F.broadcast(queries.select(query_id_col, query_vec_col))
+    # score n_vecs × n_queries cosine folds: a compact parquet
+    # input is ONE scan split, so without the stats-gated spread
+    # the whole scoring chain runs on one core (measured r12:
+    # knn_labels' 1.43 s single-task stage was this crossJoin) —
+    # the plan.spread discipline, ANN-scoring flavor (guide §2.5).
+    # ``spread=False`` for single-query callers, where the
+    # round-robin exchange of the vectors costs more than the one
+    # query's scoring wins back (measured r12: mmr_rerank/bm25_ndcg
+    # +0.2-0.3 s with the spread, knn_labels (20 queries) −0.5 s).
+    src = vecs.select(id_col, vec_col)
+    if spread:
+        src = plan.spread(src)
+    return _rank_per_query(
+        src.crossJoin(q), k, metric, id_col, vec_col, query_id_col, query_vec_col
+    )
 
-        qrows = queries.select(query_id_col, query_vec_col).collect()
-        qids = np.array([r[0] for r in qrows])
-        qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        if metric == "cosine":
-            qnorm = np.linalg.norm(qmat, axis=1)
-            qnorm[qnorm == 0] = 1.0
 
-        def _score(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.array(pdf["__v__"].tolist(), dtype=np.float64)
-                if metric == "cosine":
-                    nrm = np.linalg.norm(mat, axis=1)
-                    nrm[nrm == 0] = 1.0
-                    s = (mat @ qmat.T) / np.outer(nrm, qnorm)
-                else:
-                    s = -np.sqrt(
-                        ((mat[:, None, :] - qmat[None, :, :]) ** 2).sum(-1)
-                    )
-                # partition-local top-k per query bounds the shuffle
-                out = []
-                ids = pdf["__id__"].to_numpy()
-                for j, qid in enumerate(qids):
-                    col = s[:, j]
-                    take = min(k, len(col))
-                    idx = np.argpartition(-col, take - 1)[:take]
-                    out.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "vec_id": ids[idx], "score": np.round(col[idx], 6)}
-                        )
-                    )
-                yield pd.concat(out, ignore_index=True)
-
-        qid_type = queries.schema[query_id_col].dataType.simpleString()
-        id_type = vecs.schema[id_col].dataType.simpleString()
-        src = vecs.select(
-            F.col(id_col).alias("__id__"),
-            F.col(vec_col).cast("array<double>").alias("__v__"),
-        )
-        if spread:
-            src = plan.spread(src)
-        scored = src.mapInPandas(
-            _score, f"query_id {qid_type}, vec_id {id_type}, score double"
-        )
+def _rank_per_query(
+    paired: DataFrame,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """Score (vector, query) pairs and keep each query's k best:
+    (query_id, vec_id, rank INT, score 6dp), score = cosine similarity
+    or negative L2, ties to the smaller vec_id."""
+    if metric == "cosine":
+        score = V.cosine_similarity(F.col(vec_col), F.col(query_vec_col))
+    elif metric == "l2":
+        score = -V.l2_distance(F.col(vec_col), F.col(query_vec_col))
     else:
-        q = F.broadcast(queries.select(query_id_col, query_vec_col))
-        # score n_vecs × n_queries cosine folds: a compact parquet
-        # input is ONE scan split, so without the stats-gated spread
-        # the whole scoring chain runs on one core (measured r12:
-        # knn_labels' 1.43 s single-task stage was this crossJoin) —
-        # the plan.spread discipline, ANN-scoring flavor (guide §2.5).
-        # ``spread=False`` for single-query callers, where the
-        # round-robin exchange of the vectors costs more than the one
-        # query's scoring wins back (measured r12: mmr_rerank/bm25_ndcg
-        # +0.2-0.3 s with the spread, knn_labels (20 queries) −0.5 s).
-        src = vecs.select(id_col, vec_col)
-        if spread:
-            src = plan.spread(src)
-        paired = src.crossJoin(q)
-        if metric == "cosine":
-            score = V.cosine_similarity(F.col(vec_col), F.col(query_vec_col))
-        elif metric == "l2":
-            score = -V.l2_distance(F.col(vec_col), F.col(query_vec_col))
-        else:
-            raise ValueError(metric)
-        scored = paired.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(id_col).alias("vec_id"),
-            F.round(score, 6).alias("score"),
-        )
+        raise ValueError(metric)
+    scored = paired.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(id_col).alias("vec_id"),
+        F.round(score, 6).alias("score"),
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -226,6 +186,51 @@ def lsh_dup_pairs(
 # --------------------------------------------------------------------------
 # IVF-style partition pruning
 # --------------------------------------------------------------------------
+#
+# One distance kernel serves every numpy stage below: IVF assignment and
+# probe selection, Lloyd training, PQ encode and PQ lookup tables. It is
+# exact int64 on the e6 paths, and its first-minimum / stable orders
+# send ties to the lowest list or centroid id (the oracle's tie-break).
+
+
+def _sqdist(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Squared L2 from each row of ``a`` (one vector, or n×d) to each
+    row of ``b`` (k×d): shape (k,) or (n, k)."""
+    return ((a[..., None, :] - b) ** 2).sum(-1)
+
+
+def _nearest(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Each row's nearest centroid; ties to the lowest centroid id."""
+    return _sqdist(mat, cents).argmin(-1)
+
+
+def _probe_lists(cents: np.ndarray, q: np.ndarray, nprobe: int) -> np.ndarray:
+    """The ``nprobe`` lists nearest ``q`` (one vector, or n×d rows),
+    nearest first; ties to the lowest list id."""
+    return np.argsort(_sqdist(q, cents), axis=-1, kind="stable")[..., :nprobe]
+
+
+def _probe_exact_l2(
+    index: DataFrame,
+    probe: Sequence[int],
+    query_vec: Sequence[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact-score the probed lists of an assigned table: a LITERAL
+    ``list_id IN (...)`` (a pushable predicate — partition or bucket
+    pruning when the table is laid out by list_id), the brute path's
+    float L2, and its (distance, id) top-k."""
+    pruned = index.filter(F.col("list_id").isin([int(i) for i in probe]))
+    return (
+        pruned.withColumn(
+            "distance", V.l2_distance(F.col(vec_col), [float(x) for x in query_vec])
+        )
+        .orderBy(F.asc("distance"), F.asc(id_col))
+        .limit(k)
+    )
+
 
 def ivf_build(
     vecs: DataFrame,
@@ -233,46 +238,30 @@ def ivf_build(
     iters: int = 5,
     seed: int = 42,
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    distributed: bool = False,
 ):
     """Train centroids and return (assigned DataFrame with 'list_id',
     centroids ndarray).
 
-    Two trainer paths, same output contract:
-    - default: seeded sample init + Lloyd iterations, all driver-side
-      numpy on a ≤100k sample — the right call whenever a sample fits
-      the driver (centroid quality needs a representative sample, not
-      every row);
-    - ``distributed=True``: delegate the Lloyd loop to
-      ``kmeans_fit`` — the exact fixed-point cluster-side trainer —
-      when the training set itself must be the full (or a huge)
-      vector table. Centroids come back as µ-unit integers and are
-      rescaled to float64 here.
+    Seeded sample init + Lloyd iterations, all driver-side numpy on a
+    ≤100k sample — centroid quality needs a representative sample, not
+    every row.
 
     At scale the assigned table is written partitioned by list_id so a
     probe reads only nprobe partitions (partition pruning at the file
     level)."""
-    if distributed:
-        cents_e6, _assigned = kmeans_fit(
-            vecs, k=nlist, iterations=iters, id_col=id_col, vec_col=vec_col
-        )
-        cents = np.array(cents_e6, dtype=np.float64) / 1e6
-    else:
-        sample = np.array(
-            [r[0] for r in vecs.select(vec_col).limit(100_000).collect()],
-            dtype=np.float64,
-        )
-        cents = _lloyd(sample, nlist, iters, np.random.RandomState(seed))
+    sample = np.array(
+        [r[0] for r in vecs.select(vec_col).limit(100_000).collect()],
+        dtype=np.float64,
+    )
+    cents = _lloyd(sample, nlist, iters, np.random.RandomState(seed))
 
     @F.pandas_udf("int")
     def _assign(emb: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series(np.zeros(0, dtype=np.int32))
         mat = np.array(emb.tolist(), dtype=np.float64)
-        d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        return pd.Series(d.argmin(1).astype(np.int32))
+        return pd.Series(_nearest(mat, cents).astype(np.int32))
 
     return vecs.withColumn("list_id", _assign(F.col(vec_col))), cents
 
@@ -287,17 +276,11 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe the nprobe nearest inverted lists, exact-score only those.
-    The list_id filter is a pushable predicate → partition pruning when
-    the table is partitioned by list_id."""
+    """Single-vector probe: pick the nprobe nearest inverted lists on
+    the driver and exact-score only those — no barrier, no collect."""
     q = np.asarray(list(query_vec), dtype=np.float64)
-    d = ((centroids - q) ** 2).sum(1)
-    probe = [int(i) for i in d.argsort()[:nprobe]]
-    pruned = assigned.filter(F.col("list_id").isin(probe))
-    return (
-        pruned.withColumn("distance", V.l2_distance(F.col(vec_col), list(q)))
-        .orderBy(F.asc("distance"), F.asc(id_col))
-        .limit(k)
+    return _probe_exact_l2(
+        assigned, _probe_lists(centroids, q, nprobe), q, k, id_col, vec_col
     )
 
 
@@ -306,8 +289,9 @@ class VecIndex:
     """A built IVF index handle: the assigned vector table (one
     ``list_id`` per vector) + driver-side centroids + probe width.
     The in-memory analogue of the reference's HNSW vector index
-    (storage.py:124-133) — built once over a store, probed per batch
-    via ``ivf_topk_per_query``. ``from_table`` re-opens an index
+    (storage.py:124-133) — built once over a store, probed per vector
+    (``closest``, via ``ivf_topk``) or per batch (``topk``, via
+    ``ivf_topk_per_query``). ``from_table`` re-opens an index
     persisted with ``save_ivf_index`` (bucketed by list_id, so probes
     bucket-prune)."""
 
@@ -328,11 +312,9 @@ class VecIndex:
         vec_col: str = "embedding",
         seed: int = 42,
         iters: int = 5,
-        distributed: bool = False,
     ) -> "VecIndex":
         assigned, cents = ivf_build(
-            vecs, nlist, iters=iters, seed=seed,
-            id_col=id_col, vec_col=vec_col, distributed=distributed,
+            vecs, nlist, iters=iters, seed=seed, vec_col=vec_col
         )
         return cls(assigned, cents, nprobe, id_col, vec_col)
 
@@ -364,6 +346,21 @@ class VecIndex:
             id_col=self.id_col,
             vec_col=self.vec_col,
             metric=metric,
+        )
+
+    def closest(self, table: DataFrame, query_vec: Sequence[float], k: int) -> DataFrame:
+        """The ``k`` rows of ``table`` nearest ``query_vec`` by the
+        single-vector probe: ``table``'s own columns + ``distance``
+        (the exact kNN layout), ascending (distance, id)."""
+        hits = ivf_topk(
+            self.assigned, self.centroids, query_vec, k=k, nprobe=self.nprobe,
+            id_col=self.id_col, vec_col=self.vec_col,
+        ).select(self.id_col, "distance")
+        # ids + distance come from the probe; re-join the full rows.
+        return (
+            table.join(F.broadcast(hits), self.id_col)
+            .select(*table.columns, "distance")
+            .orderBy(F.asc("distance"), F.asc(self.id_col))
         )
 
 
@@ -402,16 +399,15 @@ def ivf_topk_per_query(
     nprobe = nlist reproduces the exact result).
     """
     cents = np.asarray(centroids, dtype=np.float64)
-    nprobe = min(nprobe, len(cents))
 
     @F.pandas_udf("array<int>")
     def _probe(qv: pd.Series) -> pd.Series:
         if len(qv) == 0:
             return pd.Series([], dtype=object)
         mat = np.array(qv.tolist(), dtype=np.float64)
-        d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        idx = np.argsort(d, axis=1)[:, :nprobe]
-        return pd.Series([[int(j) for j in row] for row in idx])
+        return pd.Series(
+            [[int(j) for j in row] for row in _probe_lists(cents, mat, nprobe)]
+        )
 
     # Pin before the driver action: the collect below and the
     # broadcast join both consume q_lists, and the upstream query
@@ -436,25 +432,11 @@ def ivf_topk_per_query(
     pruned = assigned.filter(F.col("list_id").isin(probed)).select(
         "list_id", id_col, vec_col
     )
-    paired = pruned.join(F.broadcast(q_lists), "list_id")
-    if metric == "cosine":
-        score = V.cosine_similarity(F.col(vec_col), F.col(query_vec_col))
-    elif metric == "l2":
-        score = -V.l2_distance(F.col(vec_col), F.col(query_vec_col))
-    else:
-        raise ValueError(metric)
     # no dedup needed: each store vector lives in exactly one list, so
     # a (query, vec) pair can match through at most one probed list.
-    scored = paired.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(id_col).alias("vec_id"),
-        F.round(score, 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "score")
+    return _rank_per_query(
+        pruned.join(F.broadcast(q_lists), "list_id"),
+        k, metric, id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
@@ -476,13 +458,33 @@ def ivf_topk_per_query(
 def _lloyd(sample: np.ndarray, ksub: int, iters: int, rng: np.random.RandomState) -> np.ndarray:
     cents = sample[rng.choice(len(sample), size=min(ksub, len(sample)), replace=False)]
     for _ in range(iters):
-        d = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
+        assign = _nearest(sample, cents)
         for j in range(len(cents)):
             mask = assign == j
             if mask.any():
                 cents[j] = sample[mask].mean(0)
     return cents
+
+
+def _pq_codes(mat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, m) nearest-centroid code per PQ subspace."""
+    m, _, dsub = codebooks.shape
+    return np.stack(
+        [_nearest(mat[:, j * dsub : (j + 1) * dsub], codebooks[j]) for j in range(m)],
+        axis=1,
+    )
+
+
+def _pq_lut(codebooks: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """(m, ksub) squared distances from each subvector of ``q`` to each
+    centroid of its subspace — the asymmetric-distance lookup table."""
+    m, _, dsub = codebooks.shape
+    return np.stack([_sqdist(q[j * dsub : (j + 1) * dsub], codebooks[j]) for j in range(m)])
+
+
+def _adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Asymmetric distance of each (n, m) code row: m LUT gathers, summed."""
+    return lut[np.arange(lut.shape[0]), codes].sum(1)
 
 
 def pq_build(
@@ -522,7 +524,6 @@ def pq_encode(
     """Add a BINARY column of m uint8 codes (nearest centroid per
     subspace). One Arrow-batched pass; at rest the coded table is
     m bytes/vector + ids — this is the table a 100-TB deployment scans."""
-    m, _, dsub = codebooks.shape
     cb = codebooks  # captured in the closure, shipped once per executor
 
     @F.pandas_udf("binary")
@@ -530,11 +531,7 @@ def pq_encode(
         if len(emb) == 0:
             return pd.Series(np.zeros(0, dtype=object))
         mat = np.array(emb.tolist(), dtype=np.float64)
-        codes = np.empty((len(mat), m), dtype=np.uint8)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-            codes[:, j] = d.argmin(1)
+        codes = _pq_codes(mat, cb).astype(np.uint8)
         return pd.Series([c.tobytes() for c in codes])
 
     return vecs.withColumn(code_col, _enc(F.col(vec_col)))
@@ -562,20 +559,18 @@ def pq_topk(
     q = np.asarray(list(query_vec), dtype=np.float64)
     if len(q) != m * dsub:
         raise ValueError(f"query dim {len(q)} != {m * dsub}")
-    lut = np.stack(
-        [((codebooks[j] - q[j * dsub : (j + 1) * dsub]) ** 2).sum(1) for j in range(m)]
-    )  # (m, ksub) float64
+    lut = _pq_lut(codebooks, q)  # (m, ksub) float64
 
     @F.pandas_udf("double")
-    def _adc(codes: pd.Series) -> pd.Series:
+    def _dist(codes: pd.Series) -> pd.Series:
         if len(codes) == 0:
             return pd.Series(np.zeros(0))
         arr = np.frombuffer(b"".join(codes.tolist()), dtype=np.uint8).reshape(-1, m)
-        return pd.Series(lut[np.arange(m), arr].sum(1))
+        return pd.Series(_adc(lut, arr))
 
     return (
         encoded.select(id_col, code_col)
-        .withColumn("distance", _adc(F.col(code_col)))
+        .withColumn("distance", _dist(F.col(code_col)))
         .orderBy(F.asc("distance"), F.asc(id_col))
         .limit(k)
         .select(id_col, "distance")
@@ -637,7 +632,7 @@ def pq_adc_scan_quantized(
     Output: (id, dist_e12 BIGINT) ascending, tie-break id.
     """
     cb = np.asarray(codebooks_e6, dtype=np.int64)
-    m, ksub, dsub = cb.shape
+    m, _, dsub = cb.shape
     q = np.asarray(list(query_vec))
     if len(q) != m * dsub:
         raise ValueError(f"query dim {len(q)} != {m * dsub}")
@@ -648,29 +643,16 @@ def pq_adc_scan_quantized(
         q_e6 = q.astype(np.int64)
     else:
         q_e6 = np.round(q.astype(np.float64) * 1_000_000.0).astype(np.int64)
-    lut = np.stack(
-        [((cb[j] - q_e6[j * dsub : (j + 1) * dsub]) ** 2).sum(1) for j in range(m)]
-    )  # (m, ksub) int64, exact
+    lut = _pq_lut(cb, q_e6)  # (m, ksub) int64, exact
 
-    quant = vecs.select(
-        F.col(id_col),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("__v__"),
-    )
+    quant = vecs.select(F.col(id_col), V.to_e6(vec_col).alias("__v__"))
 
     @F.pandas_udf("long")
     def _enc_adc(ve: pd.Series) -> pd.Series:
         if len(ve) == 0:
             return pd.Series(np.zeros(0, dtype=np.int64))
         mat = np.array(ve.tolist(), dtype=np.int64)
-        total = np.zeros(len(mat), dtype=np.int64)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-            total += lut[j, d.argmin(1)]
-        return pd.Series(total)
+        return pd.Series(_adc(lut, _pq_codes(mat, cb)))
 
     return (
         quant.withColumn("dist_e12", _enc_adc(F.col("__v__")))
@@ -692,6 +674,26 @@ def load_ivfpq_e6() -> dict:
     )
     with open(path) as f:
         return json.load(f)
+
+
+def _ivfpq_probe(
+    coarse_e6: np.ndarray,
+    codebooks_e6: np.ndarray,
+    query_e6: Sequence[int],
+    nprobe: int,
+) -> tuple[np.ndarray, np.ndarray, dict[int, np.ndarray]]:
+    """The IVFADC probe, in exact int64: (centroids, codebooks, LUTs),
+    with one residual LUT per probed list — the query minus that
+    list's centroid, against the codebooks — keyed by list id, nearest
+    list first."""
+    cents = np.asarray(coarse_e6, dtype=np.int64)
+    cb = np.asarray(codebooks_e6, dtype=np.int64)
+    m, _, dsub = cb.shape
+    q = np.asarray(list(query_e6), dtype=np.int64)
+    if q.shape[0] != m * dsub:
+        raise ValueError(f"query dim {q.shape[0]} != {m * dsub}")
+    probed = _probe_lists(cents, q, nprobe)
+    return cents, cb, {int(l): _pq_lut(cb, q - cents[l]) for l in probed}
 
 
 def ivfpq_scan_quantized(
@@ -724,57 +726,20 @@ def ivfpq_scan_quantized(
     Output: (id, dist_e12 BIGINT) ascending approximate residual-ADC
     distance, tie-break id.
     """
-    cents = np.asarray(coarse_e6, dtype=np.int64)
-    cb = np.asarray(codebooks_e6, dtype=np.int64)
-    nlist = cents.shape[0]
-    m, ksub, dsub = cb.shape
-    q = np.asarray(list(query_e6), dtype=np.int64)
-    if q.shape[0] != m * dsub:
-        raise ValueError(f"query dim {q.shape[0]} != {m * dsub}")
-    nprobe = min(nprobe, nlist)
-    # probe selection: exact integer distances, (dist, list_id) order
-    qd = ((cents - q) ** 2).sum(1)
-    probed = np.lexsort((np.arange(nlist), qd))[:nprobe]
-    probed_set = set(int(x) for x in probed)
-    # per-list LUTs from the query's residual in that list
-    luts = {}
-    for l in probed:
-        qres = q - cents[l]
-        luts[int(l)] = np.stack(
-            [
-                ((cb[j] - qres[j * dsub : (j + 1) * dsub]) ** 2).sum(1)
-                for j in range(m)
-            ]
-        )  # (m, ksub) int64
-
-    quant = vecs.select(
-        F.col(id_col),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("__v__"),
-    )
+    cents, cb, luts = _ivfpq_probe(coarse_e6, codebooks_e6, query_e6, nprobe)
+    quant = vecs.select(F.col(id_col), V.to_e6(vec_col).alias("__v__"))
 
     @F.pandas_udf("long")
     def _scan(ve: pd.Series) -> pd.Series:
         if len(ve) == 0:
             return pd.Series(np.zeros(0, dtype=np.int64))
         mat = np.array(ve.tolist(), dtype=np.int64)
-        d2c = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d2c.argmin(1)  # first-min = lowest list id on ties
+        assign = _nearest(mat, cents)
         out = np.full(len(mat), -1, dtype=np.int64)  # -1 = pruned
-        for l in probed_set:
+        for l, lut in luts.items():
             mask = assign == l
-            if not mask.any():
-                continue
-            res = mat[mask] - cents[l]
-            total = np.zeros(mask.sum(), dtype=np.int64)
-            lut = luts[l]
-            for j in range(m):
-                sub = res[:, j * dsub : (j + 1) * dsub]
-                d = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-                total += lut[j, d.argmin(1)]
-            out[mask] = total
+            if mask.any():
+                out[mask] = _adc(lut, _pq_codes(mat[mask] - cents[l], cb))
         return pd.Series(out)
 
     # The pruned-list filter below references the UDF's output column,
@@ -833,12 +798,7 @@ def ivfpq_topk_rerank(
             F.col(id_col),
             F.aggregate(
                 F.zip_with(
-                    F.transform(
-                        F.col(vec_col),
-                        lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast(
-                            "long"
-                        ),
-                    ),
+                    V.to_e6(vec_col),
                     qlit,
                     lambda a, b: (a - b) * (a - b),
                 ),
@@ -871,13 +831,7 @@ def pca_project_quantized(
     mu = np.asarray(list(mean_e6), dtype=np.int64)
     comps = np.asarray(components_e6, dtype=np.int64)
 
-    quant = vecs.withColumn(
-        "__v__",
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ),
-    )
+    quant = vecs.withColumn("__v__", V.to_e6(vec_col))
 
     @F.pandas_udf("array<long>")
     def _proj(ve: pd.Series) -> pd.Series:
@@ -941,11 +895,7 @@ def kmeans_fit(
     """
     d = len(vectors.select(vec_col).first()[0])
     q = vectors.select(
-        F.col(id_col).alias("__id__"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("__v__"),
+        F.col(id_col).alias("__id__"), V.to_e6(vec_col).alias("__v__")
     ).cache()
     init = [
         r["__v__"]
@@ -970,8 +920,7 @@ def kmeans_fit(
                     if len(pdf) == 0:
                         continue
                     mat = np.array(pdf["__v__"].tolist(), dtype=np.int64)
-                    diff = mat[:, None, :] - cmat[None, :, :]
-                    d2 = (diff * diff).sum(-1)  # int64 exact
+                    d2 = _sqdist(mat, cmat)  # int64 exact
                     cid = d2.argmin(1)
                     yield pd.DataFrame(
                         {
@@ -1068,7 +1017,6 @@ def semantic_dedup(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "sql",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023: prune
@@ -1100,7 +1048,7 @@ def semantic_dedup(
     """
     if assigned is None:
         _cents, assigned = kmeans_fit(
-            vectors, k, iterations, id_col=id_col, vec_col=vec_col, method=method
+            vectors, k, iterations, id_col=id_col, vec_col=vec_col
         )
     return _keepers(assigned).select(
         "cluster",
@@ -1118,7 +1066,6 @@ def semantic_prune(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "sql",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Thresholded SemDeDup: where `semantic_dedup` keeps exactly one
@@ -1146,16 +1093,10 @@ def semantic_prune(
     """
     if assigned is None:
         _cents, assigned = kmeans_fit(
-            vectors, k, iterations, id_col=id_col, vec_col=vec_col, method=method
+            vectors, k, iterations, id_col=id_col, vec_col=vec_col
         )
     keepers = _keepers(assigned).select("cluster", "__kid__")
-    q = vectors.select(
-        F.col(id_col).alias("__id__"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.round(x * 1_000_000.0, 0).cast("long"),
-        ).alias("__v__"),
-    )
+    q = vectors.select(F.col(id_col).alias("__id__"), V.to_e6(vec_col).alias("__v__"))
     kv = keepers.join(
         q.select(F.col("__id__").alias("__kid__"), F.col("__v__").alias("__kv__")),
         "__kid__",
@@ -1190,7 +1131,6 @@ def cluster_stratified_sample(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "sql",
     salt: str = "strat",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -1216,7 +1156,7 @@ def cluster_stratified_sample(
 
     if assigned is None:
         _cents, assigned = kmeans_fit(
-            vectors, k, iterations, id_col=id_col, vec_col=vec_col, method=method
+            vectors, k, iterations, id_col=id_col, vec_col=vec_col
         )
     # cap_per_group's selection key md5(salt || '|' || id) is the
     # identical string this operator has always used, so the drawn set
@@ -1337,13 +1277,12 @@ def knn_classify(
     label_col: str = "label",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    method: str = "sql",
 ) -> DataFrame:
     """kNN label propagation (weak supervision / auto-labeling): each
     query vector takes the majority label among its k exact-cosine
     nearest labeled neighbours; ties break by (count desc, label asc)
     — fully deterministic, so the whole classifier is
-    oracle-replayable when the `sql` scoring path is used.
+    oracle-replayable.
 
     Shape: `topk_per_query` (broadcast queries, one (query, vec, score)
     shuffle) → broadcast-join the labels onto the k·|queries| winner
@@ -1359,7 +1298,6 @@ def knn_classify(
         query_id_col=query_id_col,
         query_vec_col=query_vec_col,
         metric="cosine",
-        method=method,
     )
     lab = labeled.select(
         F.col(id_col).alias("vec_id"), F.col(label_col).alias("__lbl__")
@@ -1396,9 +1334,7 @@ def save_ivf_index(
     *,
     iters: int = 5,
     seed: int = 42,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    distributed: bool = False,
 ) -> np.ndarray:
     """Persist the IVF index: the assigned vector table BUCKETED BY
     list_id (a probe's literal ``list_id IN (...)`` filter then reads
@@ -1411,10 +1347,7 @@ def save_ivf_index(
 
     drop_table(spark, f"{table_prefix}_ivf")
     drop_table(spark, f"{table_prefix}_centroids")
-    assigned, cents = ivf_build(
-        vecs, nlist, iters=iters, seed=seed,
-        id_col=id_col, vec_col=vec_col, distributed=distributed,
-    )
+    assigned, cents = ivf_build(vecs, nlist, iters=iters, seed=seed, vec_col=vec_col)
     (
         assigned.write.mode("overwrite")
         .bucketBy(max(nlist, 1), "list_id")
@@ -1428,38 +1361,6 @@ def save_ivf_index(
         cent_rows, "list_id int, centroid array<double>"
     ).write.mode("overwrite").saveAsTable(f"{table_prefix}_centroids")
     return cents
-
-
-def ivf_topk_indexed(
-    spark,
-    table_prefix: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    nprobe: int = 4,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a persisted IVF index: centroids load from the tiny side
-    table (driver-side argsort picks the nprobe lists), and the scan
-    carries a LITERAL isin on list_id so bucket pruning reads
-    |index|·nprobe/nlist — the repeat-query operating point where the
-    per-query cost no longer includes assignment or training."""
-    cents_rows = (
-        spark.table(f"{table_prefix}_centroids").orderBy("list_id").collect()
-    )
-    cents = np.array([r["centroid"] for r in cents_rows], dtype=np.float64)
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    d = ((cents - q) ** 2).sum(1)
-    probe = [int(i) for i in d.argsort()[:nprobe]]
-    pruned = spark.table(f"{table_prefix}_ivf").filter(
-        F.col("list_id").isin(probe)
-    )
-    return (
-        pruned.withColumn("distance", V.l2_distance(F.col(vec_col), list(q)))
-        .orderBy(F.asc("distance"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def save_ivfpq_index(
@@ -1485,32 +1386,20 @@ def save_ivfpq_index(
     cents = np.asarray(coarse_e6, dtype=np.int64)
     cb = np.asarray(codebooks_e6, dtype=np.int64)
     nlist = cents.shape[0]
-    m, ksub, dsub = cb.shape
     drop_table(spark, f"{table_prefix}_pqcodes")
 
-    quant = vecs.select(
-        F.col(id_col),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-        ).alias("__v__"),
-    )
+    quant = vecs.select(F.col(id_col), V.to_e6(vec_col).alias("__v__"))
 
     @F.pandas_udf("struct<list_id:int, pq_code:binary>")
     def _enc(ve: pd.Series) -> pd.DataFrame:
         if len(ve) == 0:
             return pd.DataFrame({"list_id": [], "pq_code": []})
         mat = np.array(ve.tolist(), dtype=np.int64)
-        d2c = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d2c.argmin(1).astype(np.int32)
-        codes = np.empty((len(mat), m), dtype=np.uint8)
+        assign = _nearest(mat, cents).astype(np.int32)
+        codes = np.empty((len(mat), cb.shape[0]), dtype=np.uint8)
         for l in np.unique(assign):
             mask = assign == l
-            res = mat[mask] - cents[l]
-            for j in range(m):
-                sub = res[:, j * dsub : (j + 1) * dsub]
-                d = ((sub[:, None, :] - cb[j][None, :, :]) ** 2).sum(-1)
-                codes[mask, j] = d.argmin(1)
+            codes[mask] = _pq_codes(mat[mask] - cents[l], cb)
         return pd.DataFrame(
             {"list_id": assign, "pq_code": [c.tobytes() for c in codes]}
         )
@@ -1558,17 +1447,12 @@ def save_ivf_index_e6(
         if len(ve) == 0:
             return pd.Series(np.zeros(0, dtype=np.int32))
         mat = np.array(ve.tolist(), dtype=np.int64)
-        d2c = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        # np.argmin = first minimal index: ties go to the LOWEST list,
-        # matching the oracle's row_number(ORDER BY dist, l)
-        return pd.Series(d2c.argmin(1).astype(np.int32))
+        # ties go to the LOWEST list, matching the oracle's
+        # row_number(ORDER BY dist, l)
+        return pd.Series(_nearest(mat, cents).astype(np.int32))
 
-    quantized = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * 1_000_000.0, 0).cast("long"),
-    )
     (
-        vecs.withColumn("list_id", _assign(quantized))
+        vecs.withColumn("list_id", _assign(V.to_e6(vec_col)))
         .write.mode("overwrite")
         .bucketBy(max(nlist, 1), "list_id")
         .sortBy("list_id")
@@ -1596,18 +1480,13 @@ def ivf_topk_indexed_e6(
     lists' FULL vectors are scored with the exact float L2 the brute
     path uses — the IVF-pruned twin of `knn.knn` whose only loss is
     coarse-quantizer recall, not distance distortion."""
-    cents = np.asarray(coarse_e6, dtype=np.int64)
-    qe = np.asarray(list(query_e6), dtype=np.int64)
-    d = ((cents - qe) ** 2).sum(1)
-    probe = [int(i) for i in np.argsort(d, kind="stable")[:nprobe]]
-    pruned = spark.table(f"{table_prefix}_ivf").filter(
-        F.col("list_id").isin(probe)
+    probe = _probe_lists(
+        np.asarray(coarse_e6, dtype=np.int64),
+        np.asarray(list(query_e6), dtype=np.int64),
+        nprobe,
     )
-    q = [float(x) for x in query_vec]
-    return (
-        pruned.withColumn("distance", V.l2_distance(F.col(vec_col), q))
-        .orderBy(F.asc("distance"), F.asc(id_col))
-        .limit(k)
+    return _probe_exact_l2(
+        spark.table(f"{table_prefix}_ivf"), probe, query_vec, k, id_col, vec_col
     )
 
 
@@ -1629,30 +1508,14 @@ def ivfpq_topk_indexed(
     bit-identical output to `ivfpq_scan_quantized` at the same nprobe
     (parity-tested), minus the encode cost: the repeat-query operating
     point."""
-    cents = np.asarray(coarse_e6, dtype=np.int64)
-    cb = np.asarray(codebooks_e6, dtype=np.int64)
-    nlist = cents.shape[0]
-    m, ksub, dsub = cb.shape
-    q = np.asarray(list(query_e6), dtype=np.int64)
-    nprobe = min(nprobe, nlist)
-    qd = ((cents - q) ** 2).sum(1)
-    probed = np.lexsort((np.arange(nlist), qd))[:nprobe]
-    luts = {}
-    for l in probed:
-        qres = q - cents[l]
-        luts[int(l)] = np.stack(
-            [
-                ((cb[j] - qres[j * dsub : (j + 1) * dsub]) ** 2).sum(1)
-                for j in range(m)
-            ]
-        )
-
+    _cents, cb, luts = _ivfpq_probe(coarse_e6, codebooks_e6, query_e6, nprobe)
+    m = cb.shape[0]
     pruned = spark.table(f"{table_prefix}_pqcodes").filter(
-        F.col("list_id").isin([int(x) for x in probed])
+        F.col("list_id").isin(list(luts))
     )
 
     @F.pandas_udf("long")
-    def _adc(list_id: pd.Series, code: pd.Series) -> pd.Series:
+    def _dist(list_id: pd.Series, code: pd.Series) -> pd.Series:
         if len(code) == 0:
             return pd.Series(np.zeros(0, dtype=np.int64))
         arr = np.frombuffer(b"".join(code.tolist()), dtype=np.uint8).reshape(-1, m)
@@ -1660,12 +1523,11 @@ def ivfpq_topk_indexed(
         out = np.zeros(len(arr), dtype=np.int64)
         for l in np.unique(ls):
             mask = ls == l
-            lut = luts[int(l)]
-            out[mask] = lut[np.arange(m)[None, :], arr[mask]].sum(1)
+            out[mask] = _adc(luts[int(l)], arr[mask])
         return pd.Series(out)
 
     return (
-        pruned.withColumn("dist_e12", _adc(F.col("list_id"), F.col("pq_code")))
+        pruned.withColumn("dist_e12", _dist(F.col("list_id"), F.col("pq_code")))
         .orderBy(F.asc("dist_e12"), F.asc(id_col))
         .limit(k)
         .select(id_col, "dist_e12")
@@ -1703,7 +1565,7 @@ def bitext_margin_pairs(
     per-side top-k windows (partitioned by the respective id — fully
     parallel), and a broadcast-sized join of per-id means back onto
     the best-pair set. At corpus scale, generate candidates with the
-    IVF/SRP buckets (`ivf_topk_indexed` / `srp_signature`) and feed
+    IVF/SRP buckets (`VecIndex` / `srp_signature`) and feed
     only bucket-mates through the same margin arithmetic.
 
     Output: (src_id, tgt_id, score, margin) — one row per source with

@@ -500,42 +500,6 @@ def resolve_entities(
 # The full pipeline (C1)
 # --------------------------------------------------------------------------
 
-def build_store_indexes(
-    store: HippoStore, nlist: int = 16, nprobe: int = 4
-) -> tuple:
-    """Build (fact_index, entity_index) IVF handles over the store's
-    current fact/entity embeddings — the batch analogue of the
-    reference keeping persistent HNSW collections beside the graph
-    (storage.py:124-133). Build once per ingest session, pass to
-    ``annotate_documents``; rebuild (or ``VecIndex.from_table`` a
-    persisted one) when the store has grown materially, since facts
-    added after the build are covered by the batch-internal exact
-    pairing only within their own batch."""
-    from hippollm_spark.operators.similarity import VecIndex
-
-    fact_index = (
-        VecIndex.build(
-            store.facts.select("id", "embedding"),
-            nlist=nlist,
-            nprobe=nprobe,
-            id_col="id",
-        )
-        if not store.facts.isEmpty()
-        else None
-    )
-    entity_index = (
-        VecIndex.build(
-            store.entities.select("name", "embedding"),
-            nlist=nlist,
-            nprobe=nprobe,
-            id_col="name",
-        )
-        if not store.entities.isEmpty()
-        else None
-    )
-    return fact_index, entity_index
-
-
 def annotate_documents(
     store: HippoStore,
     docs: DataFrame,
@@ -544,8 +508,6 @@ def annotate_documents(
     embed,
     cfg: AnnotateConfig | None = None,
     log=None,
-    fact_index=None,
-    entity_index=None,
 ) -> HippoStore:
     """Run the staged annotation pipeline and return the updated store.
 
@@ -559,28 +521,22 @@ def annotate_documents(
     every model call — per-call records live executor-side, so the
     driver-side trail records stages).
 
-    ``fact_index`` / ``entity_index``: optional ``VecIndex`` handles
-    (see ``build_store_indexes``) routing C3/C4 candidate generation
-    through the IVF probe instead of exact batch × store scans — the
-    scale path for a store that no longer fits a per-batch full scan.
-    When not passed, the store's OWN indexes (built via
-    ``store.build_vector_indexes()``) are used automatically — the
-    reference's candidates are always index-served
-    (storage.py:124-133), so an indexed store should not need a flag;
-    exact scans remain the fallback for index-less stores. Staleness
-    is impossible by construction: the store invalidates its index
-    handles whenever ``entities``/``facts`` are reassigned (property
-    setters in store.py), so an append since the last
-    ``build_vector_indexes()`` means the auto-fallback sees ``None``
-    and takes the exact scan — never a snapshot that is silently
-    missing the new rows. Rebuild to re-enable the probed path
+    C3/C4 candidate generation probes the store's own IVF handles
+    (built via ``store.build_vector_indexes()``) instead of exact
+    batch × store scans — the scale path for a store that no longer
+    fits a per-batch full scan; the reference's candidates are always
+    index-served (storage.py:124-133), so an indexed store needs no
+    flag. Exact scans remain the fallback for index-less stores.
+    Staleness is impossible by construction: the store invalidates its
+    index handles whenever ``entities``/``facts`` are reassigned
+    (property setters in store.py), so an append since the last
+    ``build_vector_indexes()`` means the fallback sees ``None`` and
+    takes the exact scan — never a snapshot that is silently missing
+    the new rows. Rebuild to re-enable the probed path
     (``annotate_stream``'s ``use_ann_index`` rebuilds per epoch).
     """
     cfg = cfg or AnnotateConfig()
-    if fact_index is None:
-        fact_index = getattr(store, "fact_index", None)
-    if entity_index is None:
-        entity_index = getattr(store, "entity_index", None)
+    fact_index, entity_index = store.fact_index, store.entity_index
     if log is not None:
         from dataclasses import asdict
 
@@ -646,6 +602,7 @@ def annotate_documents(
                     F.col("pos_end"),
                 )
             ).alias("sources"),
+            F.col("embedding"),  # computed once above; add_facts keeps it
             F.col("__ord__"),
         )
         .orderBy("__ord__")

@@ -83,7 +83,7 @@ def curate_corpus(
     cannot enter) — the 100 TB path: the only wide exchange is on two
     longs instead of exploded shingle strings. Pair recall is the only
     difference, and planted-dup recall is tested in
-    tools/scale_probe.py and tests/test_dedup.py.
+    tests/test_dedup.py.
 
     ``semantic_eps_e12`` (optional) inserts a SEMANTIC dedup stage —
     SemDeDup's keeper-anchored epsilon-prune
@@ -104,8 +104,8 @@ def curate_corpus(
     similarity joins and is MANDATORY at scale: boilerplate n-grams
     shared by a large fraction of the corpus (headers, license tails,
     stopword runs) turn shared-shingle blocking into a near-cross-join —
-    measured as a wedged 200k-doc run in tools/scale_probe.py until the
-    cap was wired through. Leave None only for small clean corpora
+    measured as a wedged 200k-doc run in a since-deleted scale probe
+    until the cap was wired through. Leave None only for small clean corpora
     (the sf oracle checks, where the cap must be off so DuckDB's
     uncapped SQL replays identically).
     """

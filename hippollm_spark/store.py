@@ -304,34 +304,13 @@ class HippoStore:
             else None
         )
 
-    def _closest_indexed(self, index, table: DataFrame, id_col: str,
-                         query_vec: Sequence[float], k: int):
-        from hippollm_spark.operators.similarity import ivf_topk
-
-        hits = ivf_topk(
-            index.assigned, index.centroids, query_vec, k=k,
-            nprobe=index.nprobe, id_col=id_col,
-        ).select(id_col, "distance")
-        # ids + distance come from the probe; re-join the full rows.
-        # Re-select the table's own column order + distance so the
-        # layout matches the exact kNN path (the join-key reorder put
-        # the id first, breaking positional consumers when toggling
-        # use_index).
-        return (
-            table.join(F.broadcast(hits), id_col)
-            .select(*table.columns, "distance")
-            .orderBy(F.asc("distance"), F.asc(id_col))
-        )
-
     def get_closest_entities(
         self, query_vec: Sequence[float], k: int = 5, *, use_index: bool = False
     ):
         if use_index:
             if self.entity_index is None:
                 raise ValueError("call build_vector_indexes() first")
-            return self._closest_indexed(
-                self.entity_index, self.entities, "name", query_vec, k
-            )
+            return self.entity_index.closest(self.entities, query_vec, k)
         return knn.knn_entities(self.entities, query_vec, k)
 
     def get_closest_facts(
@@ -340,9 +319,7 @@ class HippoStore:
         if use_index:
             if self.fact_index is None:
                 raise ValueError("call build_vector_indexes() first")
-            return self._closest_indexed(
-                self.fact_index, self.facts, "id", query_vec, k
-            )
+            return self.fact_index.closest(self.facts, query_vec, k)
         return knn.knn_facts(self.facts, query_vec, k)
 
     def get_closest_facts_with_entities_union(

@@ -47,8 +47,8 @@ def annotate_stream(
     is given the store is persisted after every epoch (restart-safe
     together with ``checkpoint``).
 
-    ``use_ann_index``: rebuild the C3/C4 IVF candidate indexes from the
-    store at the START of every epoch and pass them through — the
+    ``use_ann_index``: rebuild the store's C3/C4 IVF candidate indexes
+    (``store.build_vector_indexes``) at the START of every epoch — the
     steady-state ingest shape when the store dwarfs each micro-batch
     (an epoch's candidate work becomes |batch|·|store|·nprobe/nlist
     instead of |batch|·|store|). Coverage matches the reference's
@@ -60,17 +60,9 @@ def annotate_stream(
     def _process(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        fact_index = entity_index = None
         if use_ann_index:
-            from hippollm_spark.pipelines.annotate import build_store_indexes
-
-            fact_index, entity_index = build_store_indexes(
-                store, nlist=index_nlist, nprobe=index_nprobe
-            )
-        annotate_documents(
-            store, batch_df, llm, nli, embed, cfg,
-            fact_index=fact_index, entity_index=entity_index,
-        )
+            store.build_vector_indexes(nlist=index_nlist, nprobe=index_nprobe)
+        annotate_documents(store, batch_df, llm, nli, embed, cfg)
         # Materialize new state so the next epoch's lineage doesn't
         # stack unioned plans epoch over epoch.
         store.entities = plan.barrier(store.entities, eager=True)

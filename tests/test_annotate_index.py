@@ -19,7 +19,6 @@ from hippollm_spark.operators.similarity import (
 from hippollm_spark.pipelines.annotate import (
     AnnotateConfig,
     annotate_documents,
-    build_store_indexes,
     dedup_facts,
     resolve_entities,
 )
@@ -169,10 +168,9 @@ def test_annotate_end_to_end_with_indexes(spark, seeded_store):
         [(100, "Paris article", "http://wiki/paris", DOC, None)],
         "doc_id long, title string, url string, content string, date timestamp",
     )
-    fact_index, entity_index = build_store_indexes(
-        seeded_store, nlist=2, nprobe=2
-    )
-    assert fact_index is not None and entity_index is not None
+    seeded_store.build_vector_indexes(nlist=2, nprobe=2)
+    assert seeded_store.fact_index is not None
+    assert seeded_store.entity_index is not None
     store = annotate_documents(
         seeded_store,
         docs,
@@ -180,8 +178,6 @@ def test_annotate_end_to_end_with_indexes(spark, seeded_store):
         ScriptedNLI(table=NLI_TABLE),
         hash_embedding_udf(DIM),
         AnnotateConfig(splitter="paragraph", embed_dim=DIM),
-        fact_index=fact_index,
-        entity_index=entity_index,
     )
     texts = {r["text"] for r in store.facts.collect()}
     assert "France's capital is Paris" not in texts  # dedup via the index

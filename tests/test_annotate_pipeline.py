@@ -5,6 +5,7 @@ models are fakes (FIXTURES.md §5)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,6 +105,27 @@ def test_annotate_end_to_end(spark, seeded_store):
     # Embeddings present on everything that was appended (integrity P7).
     rep = store.check_integrity()
     assert rep["ok"] == 1
+
+
+def test_annotate_stores_the_embedding_it_computed(spark):
+    """add_facts keeps the embedding annotate computed once: a store
+    built without ``embed`` still gets every new fact's vector, so the
+    next batch's dedup can see it."""
+    t = paris_store(spark)
+    store = HippoStore(spark, entities=t["entities"], facts=t["facts"], dim=DIM)
+    docs = spark.createDataFrame(
+        [(1, "t", "u", CHUNK2, None)],
+        "doc_id long, title string, url string, content string, date timestamp",
+    )
+    annotate_documents(
+        store, docs, ScriptedLLM(script=LLM_SCRIPT), ScriptedNLI(),
+        hash_embedding_udf(DIM), AnnotateConfig(splitter="paragraph", embed_dim=DIM),
+    )
+    new = store.facts.filter("id >= 2").collect()
+    assert [r["text"] for r in new] == ["The Seine flows through Paris"]
+    for r in new:
+        want = [float(np.float32(x)) for x in hash_embedding(r["text"], DIM)]
+        assert r["embedding"] == want
 
 
 def test_annotate_runs_each_model_stage_once(spark, seeded_store):

@@ -350,14 +350,14 @@ def test_semantic_dedup_keeps_nearest_member_per_cluster(spark):
 
 
 def test_semantic_dedup_sql_and_pandas_paths_agree(spark):
-    from hippollm_spark.operators.similarity import semantic_dedup
+    """The pandas fit reaches semantic_dedup as an injected assignment."""
+    from hippollm_spark.operators.similarity import kmeans_fit, semantic_dedup
 
     pts = [(i, [float(i % 3), float(i % 5)]) for i in range(20)]
     df = spark.createDataFrame(pts, "vec_id long, embedding array<float>")
     a = sorted(map(tuple, semantic_dedup(df, k=3, iterations=2).collect()))
-    b = sorted(
-        map(tuple, semantic_dedup(df, k=3, iterations=2, method="pandas").collect())
-    )
+    _c, assigned = kmeans_fit(df, k=3, iterations=2, method="pandas")
+    b = sorted(map(tuple, semantic_dedup(df, assigned=assigned).collect()))
     assert a == b
 
 

@@ -106,34 +106,6 @@ def test_ivf_build_centroids_fixed_seed(spark):
     assert [got[i] for i in range(len(pts))] == want.tolist()
 
 
-def test_topk_pandas_method_matches_sql(spark, embeddings):
-    from pyspark.sql import functions as F
-
-    queries = embeddings.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    sql_res = similarity.topk_per_query(embeddings, queries, k=7).collect()
-    pd_res = similarity.topk_per_query(
-        embeddings, queries, k=7, method="pandas"
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert [
-        (r["query_id"], r["rank"], r["vec_id"]) for r in sorted(sql_res, key=key)
-    ] == [(r["query_id"], r["rank"], r["vec_id"]) for r in sorted(pd_res, key=key)]
-
-
-def test_knn_pandas_method_matches_sql(spark, embeddings):
-    from hippollm_spark.operators.knn import knn
-
-    q = [float(x) for x in embeddings.filter("vec_id = 11").first()["embedding"]]
-    sql_ids = [r["vec_id"] for r in knn(embeddings, q, 8, id_col="vec_id").collect()]
-    pd_ids = [
-        r["vec_id"]
-        for r in knn(embeddings, q, 8, id_col="vec_id", method="pandas").collect()
-    ]
-    assert sql_ids == pd_ids
-
-
 def test_label_centroids_match_numpy(embeddings):
     from hippollm_spark.functions.vectors import label_centroids
 
@@ -193,53 +165,54 @@ def test_pq_adc_matches_reconstruction(spark, embeddings):
         assert abs(got[r["vec_id"]] - expect) < 1e-9
 
 
-def test_ivf_distributed_trainer_recall(spark, embeddings):
-    """IVF with the distributed fixed-point trainer: same output
-    contract, recall vs exact top-k at nprobe=nlist (exhaustive probe
-    == exact search over all lists)."""
-    from hippollm_spark.operators.similarity import (
-        ivf_build,
-        ivf_topk,
-        topk_per_query,
-    )
-
-    assigned, cents = ivf_build(embeddings, nlist=4, iters=2, distributed=True)
-    assert cents.shape == (4, 64)
-    q = [r["embedding"] for r in embeddings.filter("vec_id = 0").collect()][0]
-    got = {r["vec_id"] for r in ivf_topk(assigned, cents, q, k=10, nprobe=4).collect()}
-    queries = embeddings.filter("vec_id = 0").selectExpr(
-        "vec_id as query_id", "embedding as query_vec"
-    )
-    want = {
-        r["vec_id"]
-        for r in topk_per_query(embeddings, queries, k=10).collect()
-    }
-    assert got == want
-
-
 def test_ivf_indexed_matches_inmemory_and_prunes(spark, embeddings):
+    """A persisted index re-opened with VecIndex.from_table probes like
+    the in-memory build, and the single-vector probe bucket-prunes."""
     from hippollm_spark.operators.similarity import (
+        VecIndex,
         ivf_build,
         ivf_topk,
-        ivf_topk_indexed,
         save_ivf_index,
     )
 
     q = [r["embedding"] for r in embeddings.filter("vec_id = 7").collect()][0]
-    cents = save_ivf_index(spark, embeddings, "ivf_t1", nlist=8, seed=42)
-    got = ivf_topk_indexed(spark, "ivf_t1", q, k=5, nprobe=3).collect()
+    save_ivf_index(spark, embeddings, "ivf_t1", nlist=8, seed=42)
+    idx = VecIndex.from_table(spark, "ivf_t1", nprobe=3)
+    probe = ivf_topk(idx.assigned, idx.centroids, q, k=5, nprobe=idx.nprobe)
 
     assigned, cents2 = ivf_build(embeddings, nlist=8, seed=42)
     want = ivf_topk(assigned, cents2, q, k=5, nprobe=3).collect()
-    assert [(r["vec_id"], r["distance"]) for r in got] == [
+    assert [(r["vec_id"], r["distance"]) for r in probe.collect()] == [
         (r["vec_id"], r["distance"]) for r in want
     ]
     # the probe plan prunes buckets
-    plan = (
-        ivf_topk_indexed(spark, "ivf_t1", q, k=5, nprobe=3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "SelectedBucketsCount" in plan, plan[:2000]
+
+
+def test_ivf_probe_ties_go_to_lowest_list(spark):
+    """Lists equidistant from the query: nprobe=1 probes the LOWEST list
+    id on both probe shapes (ivf_topk and VecIndex.topk), although each
+    higher list holds a nearer vector. 100 tied lists, not 2: numpy's
+    default quicksort keeps 2 or 64 equal keys in order but picks index
+    88 of 100, so only a stable sort passes at this width."""
+    from hippollm_spark.operators.similarity import VecIndex, ivf_topk
+
+    n = 100
+    cents = np.eye(n)  # every centroid is exactly 1.0 from the origin
+    rows = [
+        (l, [(0.9 if l == 0 else 0.5) * (j == l) for j in range(n)], l)
+        for l in range(n)
+    ]
+    assigned = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, list_id int"
+    )
+    origin = [0.0] * n
+    single = ivf_topk(assigned, cents, origin, k=1, nprobe=1).collect()
+    assert [r["vec_id"] for r in single] == [0]
+    queries = spark.createDataFrame([(0, origin)], "query_id int, query_vec array<double>")
+    batched = VecIndex(assigned, cents, nprobe=1).topk(queries, k=1, metric="l2")
+    assert [r["vec_id"] for r in batched.collect()] == [0]
 
 
 def test_ivf_index_e6_frozen_centroids(spark, embeddings):
